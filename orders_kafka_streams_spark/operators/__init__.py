@@ -6,16 +6,9 @@ Registry ORDER matters: the driver's correctness report caps at the
 first ~50 entries, so the merged registry is interleaved ROUND-ROBIN
 across modules — any prefix samples every query family (pipeline,
 relational, windows, dedup, knn, text, streaming, multimodal, …)
-instead of exhausting module 1 before module 2 appears.
-
-ROTATION (round 3+): queries already driver-verified in earlier
-rounds (`_DRIVER_CHECKED`, derived from the committed
-CORRECTNESS_r{N}.json artifacts at import time) sort AFTER
-never-checked ones, so the union of per-round 50-query samples
-converges on full driver coverage. `_RECHECK_FIRST` pins queries the
-previous round flagged (q_scd2 hash-red in r2) plus this round's
-rewrites to the very front so fixes are re-verified by the hard
-signal.
+instead of exhausting module 1 before module 2 appears. The order is
+a function of the code alone — each module's ``QUERIES`` order, dealt
+across ``_MODULES`` in list order — never of files on disk.
 """
 
 from __future__ import annotations
@@ -54,67 +47,6 @@ _MODULES = [
 #: kept visible so registry shrinkage is diagnosable, never silent.
 SKIPPED_MODULES: list[tuple[str, str]] = []
 
-#: pinned to the front of the driver sample: queries the previous
-#: round's driver report flagged, PLUS previously-verified queries
-#: whose IMPLEMENTATION was rewritten this round — the rotation would
-#: otherwise sort them last and a rewrite regression would ship
-#: without the hard driver-hash signal.
-_RECHECK_FIRST = (
-    # r11 rewrites (VERDICT r10 items 1-2): consensus gained the
-    # size-dispatched broadcast-semi form, semdedup's pair kernel was
-    # re-vectorized, and the eager persist-memo change touches every
-    # memo consumer — the driver's hard hash signal lands here first
-    "q_dedup_consensus",
-    "q_semdedup",
-    # r11 new operators: streaming interleave admission twin, Gopher
-    # repetition gates
-    "q_stream_interleave",
-    "q_repetition_filter",
-    "q_semantic_pack",
-    "q_bitext_margin",
-    "q_memorization_risk",
-    "q_epoch_schedule",
-    "q_classifier_sweep",
-    "q_corpus_final",
-    "q_stream_repetition",
-    "q_pack_mask_audit",
-    "q_padding_waste",
-    "q_dedup_ngram",
-    "q_dedup_minhash",
-    "q_dedup_simhash",
-    "q_kmeans",
-)
-
-#: union of query names across every committed CORRECTNESS_r{N}.json
-#: (driver-verified in an earlier round) — deprioritized so each
-#: round's 50-query driver sample lands on never-checked queries.
-#: Derived from the artifacts at import time (r5: the hand-maintained
-#: list had drifted 45 names behind the files, wasting sample slots on
-#: already-verified queries), so folding in a new round is automatic.
-def _driver_checked() -> frozenset:
-    import json
-    import os
-    import re as _re
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    seen: set[str] = set()
-    try:
-        entries = sorted(os.listdir(root))
-    except OSError:
-        return frozenset()
-    for fname in entries:
-        if _re.fullmatch(r"CORRECTNESS_r\d+\.json", fname):
-            try:
-                with open(os.path.join(root, fname)) as fh:
-                    seen |= set(json.load(fh))
-            except (OSError, ValueError):
-                continue  # unreadable artifact: just deprioritize less
-    return frozenset(seen)
-
-
-_DRIVER_CHECKED = _driver_checked()
-
-
 def _loaded_modules() -> list[ModuleType]:
     mods: list[ModuleType] = []
     for m in _MODULES:
@@ -141,23 +73,12 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             raise ValueError(f"duplicate query names {dupes} in {mod.__name__}")
         seen |= set(q)
         regs.append(list(q.items()))
-    # rotation buckets: recheck-pins first, then never-driver-checked,
-    # then previously-verified queries — and WITHIN each bucket a
-    # round-robin interleave across modules, so the driver's ~50-entry
-    # prefix samples every family that still has unchecked queries.
-    def _bucket(name: str) -> int:
-        if name in _RECHECK_FIRST:
-            return 0
-        return 1 if name not in _DRIVER_CHECKED else 2
-
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for b in (0, 1, 2):
-        b_regs = [[kv for kv in r if _bucket(kv[0]) == b] for r in regs]
-        for i in range(max((len(r) for r in b_regs), default=0)):
-            for r in b_regs:
-                if i < len(r):
-                    name, fn = r[i]
-                    out[name] = fn
+    for i in range(max((len(r) for r in regs), default=0)):
+        for r in regs:
+            if i < len(r):
+                name, fn = r[i]
+                out[name] = fn
     return out
 
 

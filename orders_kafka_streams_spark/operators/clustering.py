@@ -291,7 +291,12 @@ def semdedup_drops(asg: DataFrame, threshold: float = SEMDEDUP_T,
 
         if isinstance(col, pa.ChunkedArray):
             col = col.combine_chunks()
-        return col.flatten().to_numpy(zero_copy_only=False).reshape(len(col), -1)
+        return (
+            col.flatten()
+            .to_numpy(zero_copy_only=False)
+            .astype(np.float64, copy=False)
+            .reshape(len(col), -1)
+        )
 
     def _emit(rows: list):
         import pyarrow as pa

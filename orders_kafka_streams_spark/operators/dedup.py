@@ -122,9 +122,9 @@ _PERSIST_MEMO: "OrderedDict[tuple[str, str, str], DataFrame]" = OrderedDict()
 
 #: live persisted relations kept per application (shingles, bands,
 #: pairs, k-means assignments, BPE vocab, ANN/posting/DSIR indexes
-#: across TWO sf_dirs — bench runs sf0.1 and sf1 in one session and a
-#: cap of 16 measurably thrashed the sf1 pass; anything beyond this is
-#: a sweep workload that should not accumulate cache).
+#: across TWO sf_dirs — a session timing sf0.1 then sf1 thrashed the
+#: sf1 pass at a cap of 16; anything beyond this is a sweep workload
+#: that should not accumulate cache).
 _PERSIST_MEMO_MAX = 48
 
 
@@ -144,15 +144,13 @@ def _memo_persist(spark: SparkSession, sf_dir: str, tag: str, build) -> DataFram
         df = build().persist()
         # Materialize EAGERLY: the memo is a shared checkpoint artifact,
         # so its build cost belongs to the first builder's CONSTRUCTION
-        # (where bench.py's cold metric captures it by contract — see
-        # the include_build comment in bench.py::run_once), not to
-        # whichever consumer happens to EXECUTE first. Lazily-built
-        # memos made the scale tiers' min-of-2 effectively min-of-ONE
-        # warm sample (the first timed run paid an 8-15 s build,
-        # r10: q_dedup_consensus 18.4 s cold vs 3.4 s warm), which is
-        # why the memo-backed heavies were the suite's noisiest entries
-        # under ambient load waves — one loaded warm sample and the
-        # gate flips. count() computes every partition into the cache.
+        # (a cold timing of that query includes it), not to whichever
+        # consumer happens to EXECUTE first. Lazily-built memos made a
+        # min-of-2 timing effectively min-of-ONE warm sample (the first
+        # timed run paid an 8-15 s build, r10: q_dedup_consensus 18.4 s
+        # cold vs 3.4 s warm), so memo-backed queries read as the
+        # noisiest under ambient load. count() computes every partition
+        # into the cache.
         df.count()
     else:
         _PERSIST_MEMO.pop(key)  # re-append below → most-recently-used

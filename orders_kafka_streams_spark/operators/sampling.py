@@ -302,6 +302,8 @@ def global_prefix_sums(
     join; the totals ride the existing offsets broadcast instead —
     same values (sum of the per-partition partial sums, exact long
     arithmetic), one fewer exchange + join in the plan."""
+    if group_totals and agg != "sum":
+        raise ValueError(f"group_totals is defined for agg='sum' only, got agg={agg!r}")
     n_parts = _stripe_parts(df, n_parts)
     cols = df.columns
 
@@ -343,7 +345,6 @@ def global_prefix_sums(
         *[f"_off_{n}" for n in sums],
     )
     if group_totals:
-        assert agg == "sum", "group_totals is defined for agg='sum' only"
         # per-part GLOBAL totals from the already-aggregated per-
         # partition cells — an O(|part groups|) relation folded into
         # the offsets broadcast (null-safe on part, like everything

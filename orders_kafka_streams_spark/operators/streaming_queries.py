@@ -20,7 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..streaming.pair_matcher import pair_match_stateful
-from ..streaming.transform_matcher import pair_match_tws, tws_available
 from pyspark.sql import functions as F
 
 from .presentation import cells_sorted
@@ -158,15 +157,6 @@ def _q_stream_win_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     tab = run_to_memory(slid, "win_sliding")
-    return spark.table(tab)
-
-
-def _q_stream_pair_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # same semantics as q_stream_pair_match, on Spark 4's native
-    # transformWithState operator — both hash-diff against the same
-    # sequential-state SQL oracle.
-    ev = events_file_stream(spark, sf_dir)
-    tab = run_to_memory(pair_match_tws(ev), "pair_tws")
     return spark.table(tab)
 
 
@@ -1873,14 +1863,6 @@ WHERE event_type = 'purchase' AND last_click_ms IS NOT NULL
   AND (prev_purchase_ms IS NULL OR last_click_ms > prev_purchase_ms)
 """,
 }
-
-# the transformWithState matcher implements identical semantics, so it
-# diffs against the identical oracle — but only where the runtime can
-# execute it (needs google.protobuf; absent in this container, so the
-# query self-gates rather than crash the driver's sweep).
-if tws_available():
-    QUERIES["q_stream_pair_tws"] = _q_stream_pair_tws
-    ORACLE["q_stream_pair_tws"] = ORACLE["q_stream_pair_match"]
 
 # the streamed ANN index equals the batch multi-table signature build —
 # sigs depend only on the vector, so batch slicing is invisible

@@ -240,7 +240,7 @@ def _pickle_by_value() -> None:
         from pyspark import cloudpickle
 
         cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:  # pragma: no cover - older cloudpickle: keep the
+    except (AttributeError, ImportError):  # older cloudpickle: keep the
         pass  # import-path behavior rather than fail registration
 
 

@@ -87,7 +87,7 @@ def test_aqe_splits_hot_order_on_skew_corpus():
     the byte-level skew that at 100 TB sits in the GBs and trips the
     256 MB production default — uncompressed bytes restore the
     at-scale relative shape. Skipped when the gitignored perf corpus
-    hasn't been generated yet (bench.py builds it on first run)."""
+    hasn't been generated yet (tools/gen_benchdata.py --skew builds it)."""
     import os
     import subprocess
     import sys
@@ -100,7 +100,7 @@ def test_aqe_splits_hot_order_on_skew_corpus():
         "sf1skew",
     )
     if not os.path.exists(os.path.join(sf1skew, "_COMPLETE")):
-        pytest.skip("sf1skew corpus not generated (run bench.py or gen_benchdata --skew)")
+        pytest.skip("sf1skew corpus not generated (run tools/gen_benchdata.py --skew)")
     out = subprocess.run(
         [sys.executable, "-c", _SKEW_CORPUS_PROBE, sf1skew],
         capture_output=True,

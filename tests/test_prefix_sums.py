@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -134,6 +135,15 @@ def test_running_max_desc_equals_window(spark):
         assert (g is None) == (wv is None), (k, g, wv)
         if g is not None:
             assert abs(g - wv) <= 1e-12, (k, g, wv)
+
+
+def test_group_totals_rejects_extrema(spark):
+    """group_totals sums the per-partition totals, so it is wrong for a
+    running max/min — the precondition must raise, not be an assert
+    that ``python -O`` strips."""
+    df = _cells(spark, n=10)
+    with pytest.raises(ValueError, match="agg='sum' only"):
+        global_prefix_sums(df, ["value"], {"best": "x"}, agg="max", group_totals={"tot": "best"})
 
 
 def test_no_unpartitioned_window(spark):

@@ -10,6 +10,8 @@ from __future__ import annotations
 import math
 import os
 
+import pytest
+
 from orders_kafka_streams_spark.sources.pysource import (
     CHUNK,
     PYSRC_N,
@@ -209,3 +211,23 @@ def test_sink_abort_removes_task_files(tmp_path):
     w.abort([_TaskFile(path=f1, rows=1), None])
     assert not os.path.exists(f1)  # uncommitted garbage swept
     assert not os.path.exists(os.path.join(d, "_MANIFEST"))
+
+
+def test_pickle_by_value_tolerates_only_old_cloudpickle(monkeypatch):
+    """A cloudpickle without register_pickle_by_value keeps import-path
+    pickling; any other registration failure propagates."""
+    from pyspark import cloudpickle
+
+    from orders_kafka_streams_spark.sources import pysource
+
+    def fail(exc):
+        def register(_module):
+            raise exc
+
+        return register
+
+    monkeypatch.setattr(cloudpickle, "register_pickle_by_value", fail(AttributeError()))
+    pysource._pickle_by_value()
+    monkeypatch.setattr(cloudpickle, "register_pickle_by_value", fail(ValueError("boom")))
+    with pytest.raises(ValueError, match="boom"):
+        pysource._pickle_by_value()

@@ -62,10 +62,10 @@ def test_cap_boundary_is_exact(spark, hot_cluster):
     )
 
 
-def test_capped_matches_bruteforce(spark, hot_cluster):
+def _bruteforce(asg):
     import numpy as np
 
-    pdf = hot_cluster.toPandas().sort_values("vec_id").reset_index(drop=True)
+    pdf = asg.toPandas().sort_values("vec_id").reset_index(drop=True)
     e = np.array(pdf["v"].tolist(), dtype=np.float64)
     nrm = np.linalg.norm(e, axis=1)
     cos = (e @ e.T) / np.outer(nrm, nrm)
@@ -76,8 +76,18 @@ def test_capped_matches_bruteforce(spark, hot_cluster):
         if above.any():
             p = np.where(above)[0]
             want.append((int(ids[j]), 0, int(ids[p].min()), round(float(cos[p, j].max()), 6)))
-    got = _canon(semdedup_drops(hot_cluster, cap=64))
-    assert got == sorted(want)
+    return sorted(want)
+
+
+def test_capped_matches_bruteforce(spark, hot_cluster):
+    assert _canon(semdedup_drops(hot_cluster, cap=64)) == _bruteforce(hot_cluster)
+
+
+def test_float_vectors_get_a_float64_gram(spark, hot_cluster):
+    """array<float> vectors must still get a float64 gram: a float32
+    one shifts round(max_cos, 6) against the double-precision oracle."""
+    asg = hot_cluster.withColumn("v", F.col("v").cast("array<float>"))
+    assert _canon(semdedup_drops(asg, cap=64)) == _bruteforce(asg)
 
 
 def test_block_pair_task_bound(spark, hot_cluster):

@@ -80,28 +80,6 @@ def test_stateful_matcher_reference_semantics(spark, crafted):
     }
 
 
-def test_tws_matcher_reference_semantics(spark, crafted):
-    # Spark-4-native transformWithState tier — same semantics as the
-    # applyInPandasWithState matcher. Needs google.protobuf at runtime
-    # (the TWS state-server protocol); skip in codec-less containers.
-    from orders_kafka_streams_spark.streaming.transform_matcher import (
-        pair_match_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("transformWithState needs google.protobuf in the runtime")
-    out = run_to_memory(pair_match_tws(_stream(spark, crafted)), "t_tws")
-    got = {
-        (r.user_id, r.fulfilled_ms - BASE_MS, r.processing_ms)
-        for r in spark.table(out).collect()
-    }
-    assert got == {
-        (1, 31_000, 30_000),
-        (3, MIN + 10_000, 30_000),
-    }
-
-
 def test_stream_join_interval_semantics(spark, crafted):
     out = run_to_memory(
         stream_pair_join(_stream(spark, crafted), window="1 hour", watermark="1 hour"),

@@ -1,8 +1,7 @@
 """Generate a PERF-ONLY sf1 corpus by scaling the driver's sf0.1
 tables 10× (VERDICT r2 item 10): per-query timings at sf0.1 drown in
-JVM/stage noise as the headline grows, so the heaviest operators are
-additionally benched at sf1, where regressions are measured above the
-noise floor.
+JVM/stage noise, so ``tests/scale_smoke.py`` also times every query
+at sf1, where regressions are measured above the noise floor.
 
 This is a BENCH corpus, not a correctness corpus — the oracle gate
 stays at the driver's sf0.01. Scaling preserves workload shape:
@@ -24,7 +23,8 @@ Defaults: /root/testdata/sf0.1 -> .benchdata/sf1 (gitignored).
 
 --skew (VERDICT r5 item 2) additionally injects the adversarial
 shapes the benign corpus lacks — the 100×-grading bar is skew
-survival, so the bench's sf1-skew tier runs the heavy queries against:
+survival, so ``tests/scale_smoke.py .benchdata/sf1skew`` runs the
+registry against:
 
 - ONE POWER USER holding 10,000 distinct basket items, each unique to
   that user (n_i = 1): the a-priori semi-join must prune the entire
@@ -243,7 +243,7 @@ def main() -> None:
         if skew:
             out = inject_skew(spark, table, out, domains)
         out.write.mode("overwrite").parquet(os.path.join(dst, f"{table}.parquet"))
-    # completeness marker written LAST: consumers (bench.py) must treat a
+    # completeness marker written LAST: consumers (test_aqe_skew) must treat a
     # corpus without it as absent — an interrupted generation otherwise
     # looks complete because early tables exist
     with open(os.path.join(dst, "_COMPLETE"), "w") as f:

@@ -1,18 +1,17 @@
 """Generate docs/REGISTRY.md — the navigable index of every
 registered query (VERDICT r5 item 8): name → implementing
-module:line → family → oracle type → bench membership/budgets.
+module:line → family → oracle type.
 Deterministic (sorted by family, then name) so the staleness gate in
 tests/test_registry_doc.py can byte-compare a regeneration against
 the committed file and self-heal drift.
 
 Run: python tools/gen_registry.py    (writes docs/REGISTRY.md)
-No Spark session needed — the registry and budgets are static.
+No Spark session needed — the registry is static.
 """
 
 from __future__ import annotations
 
 import inspect
-import json
 import os
 import sys
 
@@ -22,25 +21,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def build_lines() -> list[str]:
     if REPO not in sys.path:
         sys.path.insert(0, REPO)
-    import importlib.util
-
     from orders_kafka_streams_spark.operators import all_oracles, all_queries
-
-    spec = importlib.util.spec_from_file_location(
-        "okss_bench_for_registry", os.path.join(REPO, "bench.py")
-    )
-    saved_argv = sys.argv
-    sys.argv = ["bench.py"]
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-    sys.argv = saved_argv
 
     queries = all_queries()
     oracles = all_oracles()
-    with open(os.path.join(REPO, "bench_budgets.json")) as fh:
-        budgets = json.load(fh)
-    headline = set(bench.HEADLINE)
-    sf1_heavy = set(bench.SF1_HEAVY)
 
     rows = []
     for name, fn in queries.items():
@@ -49,15 +33,7 @@ def build_lines() -> list[str]:
         line = inspect.getsourcelines(fn)[1]
         family = os.path.splitext(os.path.basename(rel))[0]
         oracle = "sql" if name in oracles else "rows-only"
-        tiers = []
-        if name in headline:
-            b = budgets.get("sf0.1", {}).get(name)
-            tiers.append(f"sf0.1 {b}s" if b is not None else "sf0.1")
-        if name in sf1_heavy:
-            for t in ("sf1", "sf1skew"):
-                b = budgets.get(t, {}).get(name)
-                tiers.append(f"{t} {b}s" if b is not None else t)
-        rows.append((family, name, f"{rel}:{line}", oracle, ", ".join(tiers) or "—"))
+        rows.append((family, name, f"{rel}:{line}", oracle))
     rows.sort()
 
     n_sql = sum(1 for r in rows if r[3] == "sql")
@@ -68,18 +44,16 @@ def build_lines() -> list[str]:
         "(tests/test_registry_doc.py self-heals drift). One row per entry in",
         "`__spark_entry__.queries()`; `oracle = sql` means the driver",
         "hash-compares the query against its DuckDB oracle at sf0.01,",
-        "`rows-only` is the declared weaker gate. `bench` lists the timed",
-        "tiers with committed per-query budgets (bench_budgets.json).",
+        "`rows-only` is the declared weaker gate.",
         "",
         f"**{len(rows)} queries** — {n_sql} oracle-checked, "
-        f"{len(rows) - n_sql} rows-only; {len(headline)} bench headline, "
-        f"{len(sf1_heavy)} in the sf1/sf1skew heavy tiers.",
+        f"{len(rows) - n_sql} rows-only.",
         "",
-        "| family | query | source | oracle | bench |",
-        "|---|---|---|---|---|",
+        "| family | query | source | oracle |",
+        "|---|---|---|---|",
     ]
-    for family, name, src, oracle, tiers in rows:
-        lines.append(f"| {family} | {name} | {src} | {oracle} | {tiers} |")
+    for family, name, src, oracle in rows:
+        lines.append(f"| {family} | {name} | {src} | {oracle} |")
     lines.append("")
     return lines
 
