@@ -31,13 +31,10 @@ next round on both engines (textbook Lloyd caveat, semantics shared).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table, parallelize
-from ..session import env_int
 
 K_CLUSTERS = 4
 KMEANS_ITERS = 3
@@ -157,10 +154,9 @@ SEMDEDUP_T = 0.4  # within-cluster cosine cut (28/31347 pairs at sf0.01)
 #: sf1 tiers (where k-means leaves ~4 clusters of ~5k vectors and the
 #: old 4096 ran the corpus as ≤12 long gram tasks on 32 cores) —
 #: steady 3.5→1.6 s (skew) / 2.7→1.4 s (sf1) at 1024, rising again at
-#: 512 as the O(B) per-row fan-out copies overtake the gains. Env
-#: override for cluster-scale tuning (more executors → smaller cap
-#: only if per-task memory demands it; 1024² doubles ≈ 8 MB/task).
-SEMDEDUP_CLUSTER_CAP = env_int("OKSS_SEMDEDUP_CAP", 1024, 2, 65536)
+#: 512 as the O(B) per-row fan-out copies overtake the gains
+#: (1024² doubles ≈ 8 MB/task).
+SEMDEDUP_CLUSTER_CAP = 1024
 
 
 def _guard_task_size(n: int, cap: int) -> None:
@@ -454,14 +450,6 @@ def _q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 KCENTER_K = 8  # coreset size (farthest-point steps)
 
 
-def _fps_argmax(md: DataFrame) -> DataFrame:
-    """The per-step farthest-point argmax: top-1 by (min-distance,
-    vec_id) — plans as ONE TakeOrderedAndProject reduce over the
-    persisted corpus relation (no window, no global sort)."""
-    return md.orderBy(F.desc("mind"), F.asc("vec_id")).limit(1)
-
-
-KCENTER_EXACT_MAX = 4  # largest K served by the driver-paced exact loop
 KCENTER_P = 4  # tournament partitions for the default (batched) path
 
 
@@ -475,114 +463,22 @@ def _q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     data pruning. Deterministic: seeded at the lowest vec_id, ties on
     distance break to the lower vec_id.
 
-    Path dispatch (VERDICT r7 item 2): above KCENTER_EXACT_MAX the
-    query runs TOURNAMENT FPS (kcenter_batched — per-partition exact
+    Runs TOURNAMENT FPS (kcenter_batched — per-partition exact
     Arrow-kernel FPS, then one exact FPS over the P·K winner pool;
-    Gonzalez's bound degrades gracefully to 2(1+ε)) because the exact
-    loop's K−1 driver round-trips are the one remaining driver-paced
-    pattern in the engine; at or below the threshold the exact
-    kcenter_exact loop runs. The ORACLE dispatches WITH the engine
-    (the tournament oracle replicates partition seeding, tie rules,
-    and bit-identical left-fold arithmetic), so the approximation's
-    exact semantics stay hash-pinned at either K — the contract
-    changes VISIBLY with the constant, never silently.
+    Gonzalez's bound degrades gracefully to 2(1+ε)): a bounded number
+    of Spark jobs at any K, never K−1 driver round-trips. The oracle
+    replicates partition seeding, tie rules, and bit-identical
+    left-fold arithmetic, so the approximation's exact semantics stay
+    hash-pinned.
 
     Output: (sel_rank, vec_id, min_d2) — min_d2 is the squared-L2
     coverage radius at selection time within the stage's point set
     (the k-center objective's monotone certificate: non-increasing
     down the ranks)."""
-    emb = _emb_double(spark, sf_dir)
-    if KCENTER_K > KCENTER_EXACT_MAX:
-        return kcenter_final(
-            _kcenter_winners_cached(spark, sf_dir).filter(
-                F.col("lrank") <= KCENTER_K
-            ),
-            KCENTER_K,
-        )
-    return kcenter_exact(spark, emb, KCENTER_K)
-
-
-def kcenter_exact(spark: SparkSession, emb: DataFrame, k: int) -> DataFrame:
-    """The textbook distributed EXACT FPS loop, for tiny K: each of
-    the K−1 steps is ONE map + top-1 reduce job over the corpus, with
-    the running min-distance maintained INCREMENTALLY (each step folds
-    in only the distance to the NEW center via least(), so per-step
-    work is O(N·dim), not O(N·k·dim)); the only thing that crosses the
-    driver is the single argmax row whose vector becomes the next
-    step's literal — a true sequential data dependency of one row,
-    the same size class as a convergence check. (A fully-lazy unrolled
-    union chain re-executes the whole prefix at every step — measured
-    6.6 s at sf0.1 vs <1 s for this loop — because each step's
-    collect_list aggregate can't reuse the previous step's unexecuted
-    plan.) K−1 sequential argmax jobs are job-launch-bound past
-    K ≈ a few hundred — which is why this loop is gated behind
-    KCENTER_EXACT_MAX and the default path is the tournament."""
-    seed = emb.orderBy("vec_id").limit(1).select("vec_id", "v").collect()[0]
-    out = [(1, seed["vec_id"], 0.0)]
-    center_v = [float(x) for x in seed["v"]]
-
-    def lit_vec(vals: list) -> Column:
-        return F.array(*[F.lit(x) for x in vals])
-
-    # md has LINEAR lineage over the persisted corpus (each step is one
-    # select over the previous — no re-referencing, no persist churn):
-    # step k's argmax recomputes k cheap least()-folds map-side, which
-    # beats per-step persist+count jobs at every scale tested.
-    md = emb.select(
-        "vec_id", "v", F.round(_d2(F.col("v"), lit_vec(center_v)), _R).alias("mind")
+    return kcenter_final(
+        _kcenter_winners_cached(spark, sf_dir).filter(F.col("lrank") <= KCENTER_K),
+        KCENTER_K,
     )
-    for step in range(2, k + 1):
-        nxt = _fps_argmax(md).collect()[0]
-        out.append((step, nxt["vec_id"], float(nxt["mind"])))
-        if step == k:
-            break
-        md = md.select(
-            "vec_id",
-            "v",
-            F.least(
-                F.col("mind"),
-                F.round(_d2(F.col("v"), lit_vec([float(x) for x in nxt["v"]])), _R),
-            ).alias("mind"),
-        )
-    return spark.createDataFrame(
-        [(int(r), int(i), float(d)) for r, i, d in out],
-        "sel_rank int, vec_id long, min_d2 double",
-    )
-
-
-def _kcenter_oracle(k: int = KCENTER_K) -> str:
-    def d2(a: str, b: str) -> str:
-        return (
-            f"round(list_reduce(list_transform(range(1, 1 + {EMB_DIM}), "
-            f"i -> (({a})[i] - ({b})[i]) * (({a})[i] - ({b})[i])), "
-            f"(x, y) -> x + y), {_R})"
-        )
-
-    ctes = [
-        """s1 AS (
-  SELECT CAST(1 AS INTEGER) AS sel_rank, vec_id, v, CAST(0.0 AS DOUBLE) AS min_d2
-  FROM e ORDER BY vec_id LIMIT 1
-)"""
-    ]
-    for step in range(2, k + 1):
-        prev = f"s{step - 1}"
-        ctes.append(
-            f"""n{step} AS (
-  SELECT CAST({step} AS INTEGER) AS sel_rank, m.vec_id, e2.v, m.d AS min_d2
-  FROM (
-    SELECT e.vec_id, min({d2("e.v", "s.v")}) AS d
-    FROM e CROSS JOIN {prev} s GROUP BY e.vec_id
-  ) m JOIN e e2 USING (vec_id)
-  ORDER BY m.d DESC, m.vec_id ASC LIMIT 1
-),
-s{step} AS (SELECT * FROM {prev} UNION ALL SELECT * FROM n{step})"""
-        )
-    body = ",\n".join(ctes)
-    return f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-{body}
-SELECT sel_rank, vec_id, min_d2 FROM s{k}
-"""
 
 
 KC_BATCH_P = 4  # tournament partitions (p = vec_id % P)
@@ -639,7 +535,7 @@ def _q_kcenter_coreset_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself (two recursive CTEs, same seed/tie rules, bit-identical
     left-fold arithmetic), so the hash gate pins the approximation's
     exact semantics — the same oracle generator the default
-    q_kcenter_coreset dispatches to since r8.
+    q_kcenter_coreset uses since r8.
 
     Scale shape — ZERO driver-paced jobs (the loop lives inside two
     Arrow kernels): stage 1 is one shuffle on p and one
@@ -647,7 +543,7 @@ def _q_kcenter_coreset_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     with K vectorized passes; stage 2 is ONE task over the P·K-row
     winner pool (constant-size, like a broadcast build). Since r8 the
     default q_kcenter_coreset runs THIS tournament too (at its own
-    K = KCENTER_K with its own dispatching oracle); this query remains
+    K = KCENTER_K); this query remains
     the K = KC_BATCH_K demonstration pinned in the headline bench.
     At 100 TB,
     P scales with the cluster (more, smaller exact-FPS tasks) while
@@ -1215,14 +1111,7 @@ QUERIES = {
 ORACLE = {
     "q_kmeans": _kmeans_oracle(),
     "q_semdedup": _semdedup_oracle(),
-    # the oracle dispatches WITH the engine's path choice (see
-    # _q_kcenter_coreset): tournament semantics above the exact-K
-    # threshold, the exact recursive-CTE FPS at or below it
-    "q_kcenter_coreset": (
-        _kcenter_batched_oracle(KCENTER_P, KCENTER_K)
-        if KCENTER_K > KCENTER_EXACT_MAX
-        else _kcenter_oracle(KCENTER_K)
-    ),
+    "q_kcenter_coreset": _kcenter_batched_oracle(KCENTER_P, KCENTER_K),
     "q_kcenter_coreset_batched": _kcenter_batched_oracle(),
     "q_cluster_topics": _cluster_topics_oracle(),
     "q_cluster_purity": _cluster_purity_oracle(),

@@ -10,15 +10,12 @@ engine-portable for the oracle diff.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .presentation import cells_sorted
 
 from ..functions.portable import epoch_ms
-from ..session import env_int
 from ..sources.tables import load_table
 from .asof import asof_join
 
@@ -872,14 +869,13 @@ COOC_TOP_K = 20  # association pairs reported
 #: below that the bucket grid's ~(S+1)/2× row replication + join
 #: overhead costs more than it parallelizes (r11 measured the skew
 #: corpus's 2000-item bot basket: grid 1.7-2.4 s vs 0.2 s inside the
-#: one-pass explode; threshold raised 256 → 4096). Env-overridable
-#: for clusters where a smaller per-task bound is wanted.
-#: bounds: ≥ 2·COOC_PAIR_BUCKETS so the grid branch always has work
-#: below the threshold per bucket; ≤ 16384 caps the in-explode branch
+#: one-pass explode; threshold raised 256 → 4096). It must stay
+#: ≥ 2·COOC_PAIR_BUCKETS so the grid branch always has work below the
+#: threshold per bucket, and ≤ 16384, which caps the in-explode branch
 #: at C(16384,2) ≈ 134M one-task pair rows (~4 GB of 32-byte structs —
 #: the absolute ceiling a task should ever own; see the memory note
 #: below)
-COOC_HEAVY_BASKET = env_int("OKSS_COOC_HEAVY_BASKET", 4096, 32, 16384)
+COOC_HEAVY_BASKET = 4096
 COOC_PAIR_BUCKETS = 16  # hash buckets per heavy basket (S); a heavy
 #: user's pair work spreads over S(S+1)/2 = 136 join cells
 

@@ -1,4 +1,3 @@
-from .observe import peek, PeekListener
-from .explain import explain_str, exchanges_in, pushed_filters
+from .explain import explain_str, pushed_filters
 
-__all__ = ["peek", "PeekListener", "explain_str", "exchanges_in", "pushed_filters"]
+__all__ = ["explain_str", "pushed_filters"]

@@ -18,10 +18,11 @@ checkable facts about its physical plan at the oracle scale factor:
   Acceptable only for the declared Arrow-kernel queries; a
   row-at-a-time UDF sneaking into a relational query fails the gate.
 
-``tools/gen_plan_budgets.py`` snapshots the registry into
-``tests/plan_budgets.json`` (reviewed + committed — the diff IS the
-review); ``tests/test_plan_budget.py`` re-analyzes every query and
-asserts against the committed table.
+All of them come from one walk of the physical-plan tree
+(``analyze_plan``). ``tools/gen_plan_budgets.py`` snapshots the
+registry into ``tests/plan_budgets.json`` (reviewed + committed — the
+diff IS the review); ``tests/test_plan_budget.py`` re-analyzes every
+query and asserts against the committed table.
 
 Queries registered by ``operators.streaming_queries`` EXECUTE a
 Structured Streaming query when called and return the result table,
@@ -37,17 +38,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .explain import explain_str
-
-#: shuffle exchanges (BroadcastExchange deliberately NOT matched: a
-#: broadcast of a small side is the cheap alternative to a shuffle,
-#: and penalizing it would push plans the wrong way at scale)
-_SHUFFLE_RE = re.compile(
-    r"(?<!Broadcast)Exchange (hashpartitioning|rangepartitioning|"
-    r"SinglePartition|RoundRobinPartitioning|rebalance)"
-)
-
-#: every way Python code can appear in a physical plan
+#: every way Python code can appear in a physical plan, as class-name
+#: prefixes (``ArrowEvalPythonUDTFExec`` reports ``ArrowEvalPython``)
 PYTHON_NODES = (
     "BatchEvalPython",
     "ArrowEvalPython",
@@ -60,112 +52,6 @@ PYTHON_NODES = (
     "ArrowAggregatePython",
     "FlatMapGroupsInPandasWithState",
 )
-
-
-_DEPTH_RE = re.compile(r"[ :+\-]*")
-
-
-def _marker_pos(line: str) -> int:
-    """Tree depth of a plan line = where its content starts (after the
-    ``   :  +- `` drawing prefix). Materialized AQE caches embed
-    marker-less lines (``== Final Plan ==``, section headers) inside a
-    subtree — a find('+- ')-based depth returned 0 for those and
-    terminated subtree capture early, leaking the cached build plan
-    into the main count once per reference."""
-    return _DEPTH_RE.match(line).end()
-
-
-def _count_exchanges(plan: str) -> int:
-    """Shuffle-exchange count with cached subtrees counted ONCE.
-
-    ``executedPlan().toString()`` reprints an InMemoryRelation's full
-    build plan under EVERY InMemoryTableScan that references it, so a
-    relation persisted once but scanned four times would overcount its
-    build shuffles 4x (observed: the memoized k-means assignment made
-    q_semdedup read as 121 exchanges when the executed plan runs 20).
-    The cache materializes once per session, so each distinct cached
-    BUILD subtree (keyed by its normalized body — expr-ids inside the
-    shared cached plan are identical across references) is counted
-    once, plus everything outside cached subtrees.
-
-    Extraction is RECURSIVE: a cached build can itself reference other
-    cached relations (q_doremi_step's memoized KL relation scans the
-    memoized tokenized/word-histogram memos), and those inner reprints
-    both inflate the outer body's count and destabilize its dedupe key
-    (observed r5: 171 raw shuffle lines / 45 counted for a query that
-    executes ~18 build shuffles once per session). Inner builds are
-    lifted into the same global once-per-distinct-body dict before the
-    outer body is keyed and counted."""
-    subtrees: dict[str, int] = {}
-    main_text = _extract_cached(plan.splitlines(), subtrees)
-    return len(_SHUFFLE_RE.findall(main_text)) + sum(subtrees.values())
-
-
-def _extract_cached(lines: list[str], subtrees: dict[str, int]) -> str:
-    """Strip every InMemoryRelation build subtree out of ``lines``
-    (recursively), registering each distinct normalized body in
-    ``subtrees``; returns the remaining main-plan text."""
-    main: list[str] = []
-    i = 0
-    while i < len(lines):
-        line = lines[i]
-        if "InMemoryRelation" in line:
-            depth = _marker_pos(line)
-            # A MATERIALIZED nested cache reprints its AQE plan
-            # (`== Final Plan ==` …) at a RESET base indent that can be
-            # shallower than this relation's depth, so the depth rule
-            # alone ends the capture mid-body and leaks the nested
-            # build's shuffles into the main count once per reference
-            # (observed r5: q_triangle_count read 325 when the executed
-            # plan runs ~13). A GENUINE outer-tree resume line must
-            # redraw the still-open ancestor branches — the ':' columns
-            # of this relation's own prefix — while reprint lines have
-            # plain spaces there; require that drawing before ending.
-            anc_cols = [c for c in range(depth) if line[c] == ":"]
-            j = i + 1
-            while j < len(lines):
-                nxt = lines[j]
-                if _marker_pos(nxt) > depth:
-                    j += 1
-                    continue
-                if anc_cols and not any(
-                    c < len(nxt) and nxt[c] in ":+" for c in anc_cols
-                ):
-                    j += 1  # indentation-reset reprint line, still body
-                    continue
-                break
-            body = lines[i + 1 : j]
-            # a MATERIALIZED cache prints its AQE build plan twice —
-            # `== Final Plan ==` then `== Initial Plan ==` — so keep
-            # only the final section or every build shuffle counts 2×
-            # (observed r5: q_semdedup's construction-time size probe
-            # materializes the k-means cache → 26 counted as 39)
-            for k, ln in enumerate(body):
-                if "== Initial Plan ==" in ln:
-                    body = body[:k]
-                    break
-            body_text = _extract_cached(body, subtrees)
-            # dedupe key: the RELATION HEADER (output schema + storage
-            # level, ids normalized), NOT the build text. The same
-            # cached relation can print materialized (AQE Final-Plan
-            # reprint with QueryStage nodes) under one reference and
-            # unmaterialized under another — body-text keys treated
-            # those as distinct and double-counted the build, making
-            # the count depend on WHICH sibling queries had
-            # materialized which memos when the plan was analyzed
-            # (observed r5: the full suite read q_dedup_eval /
-            # q_triangle_count over budget while the standalone gate
-            # passed). Header identity is stable across materialization
-            # states; the per-key count keeps the MAX across forms so
-            # the committed budget is the upper bound of either.
-            key = re.sub(r"#\d+|plan_id=\d+", "#", line.lstrip(" :+-"))
-            n_body = len(_SHUFFLE_RE.findall(body_text))
-            subtrees[key] = max(subtrees.get(key, 0), n_body)
-            i = j
-            continue
-        main.append(line)
-        i += 1
-    return "\n".join(main)
 
 
 #: physical window operators — each carries a partitionSpec(); an
@@ -354,23 +240,18 @@ def _partial_limit_below(node) -> bool:
         return False
 
 
-def _count_exchanges_tree(df: DataFrame) -> int:
-    return _walk_plan_facts(df)["exchanges"]
+def analyze_plan(df: DataFrame) -> dict[str, Any]:
+    """The budget facts for one DataFrame's physical plan, read by
+    WALKING the plan tree (py4j). The string form of a plan is NOT a
+    stable function of the query: once a shared memo has materialized
+    (a sibling query's localCheckpoint is enough), AQE reprints cached
+    builds with reset indentation, QueryStage wrappers, and
+    ``maxToStringFields`` truncation — r5 measured the SAME query
+    string-count 8, 15, 21, 27 and 325 depending on which memos
+    happened to be hot. The tree has none of that:
 
-
-def _walk_plan_facts(df: DataFrame) -> dict[str, int]:
-    """Shuffle-exchange + unpartitioned-window counts by WALKING the
-    physical-plan tree (py4j), replacing the string parser for the
-    numbers the gate asserts on. The string form of a plan is NOT a stable function of
-    the query: once a shared memo has materialized (a sibling query's
-    localCheckpoint is enough), AQE reprints cached builds with reset
-    indentation, QueryStage wrappers, and ``maxToStringFields``
-    truncation — r5 measured the SAME query string-count 8, 15, 21,
-    27 and 325 depending on which memos happened to be hot. The tree
-    has none of that:
-
-    - ``ShuffleExchangeExec`` counts 1; ``ReusedExchangeExec`` counts 0
-      and is not entered (it is literally the reuse of another counted
+    - ``ShuffleExchangeExec`` counts 1; ``ReusedExchangeExec`` is a
+      leaf and counts 0 (it is literally the reuse of another counted
       exchange).
     - ``AdaptiveSparkPlanExec`` is entered through its INITIAL input
       plan, so the count never depends on whether AQE has finalized —
@@ -381,25 +262,40 @@ def _walk_plan_facts(df: DataFrame) -> dict[str, int]:
       (JVM identity), however many times the query re-references the
       same memoized relation (the self-join pattern).
     - QueryStage wrappers (shuffle / broadcast / table-cache) unwrap
-      into their contained plan.
+      into their contained plan; scalar/IN subquery plans are walked
+      like children.
     - ``global_windows``: WindowExec-family nodes whose
       ``partitionSpec()`` is EMPTY — the whole input relation sorted
       in ONE task, the 100×-scale hazard VERDICT r6 item 1 measured
       on continuous-column cell relations (counted over the same
       deduped traversal; the gate allows a non-zero count only for
       the documented bounded-relation whitelist entries).
+    - ``cartesian`` / ``bnlj``: a ``CartesianProductExec`` /
+      ``BroadcastNestedLoopJoinExec`` node is present; ``python``: the
+      sorted ``PYTHON_NODES`` prefixes of the Python-eval nodes present.
     """
     sc = df.sparkSession.sparkContext
     identity = sc._jvm.java.lang.System.identityHashCode
     seen_builders: set[int] = set()
-    facts = {"exchanges": 0, "global_windows": 0, "const_key_windows": 0, "wgl_partial": 0}
+    python: set[str] = set()
+    facts: dict[str, Any] = {
+        "exchanges": 0,
+        "cartesian": False,
+        "bnlj": False,
+        "global_windows": 0,
+        "const_key_windows": 0,
+        "wgl_partial": 0,
+    }
 
     def walk(node) -> None:
         cls = node.getClass().getSimpleName()
-        if cls == "ReusedExchangeExec":
-            return
         if cls == "ShuffleExchangeExec":
             facts["exchanges"] += 1
+        elif cls == "CartesianProductExec":
+            facts["cartesian"] = True
+        elif cls == "BroadcastNestedLoopJoinExec":
+            facts["bnlj"] = True
+        python.update(p for p in PYTHON_NODES if cls.startswith(p))
         if cls == "WindowGroupLimitExec" and node.mode().toString() == "Partial":
             facts["wgl_partial"] += 1
         if cls in _WINDOW_NODES and node.partitionSpec().isEmpty():
@@ -438,33 +334,8 @@ def _walk_plan_facts(df: DataFrame) -> dict[str, int]:
             walk(kids.apply(i))
 
     walk(df._jdf.queryExecution().executedPlan())
+    facts["python"] = sorted(python)
     return facts
-
-
-def analyze_plan(df: DataFrame) -> dict[str, Any]:
-    """The four budget facts for one DataFrame's physical plan."""
-    plan = explain_str(df)
-    python = sorted({node for node in PYTHON_NODES if node in plan})
-    try:
-        facts = _walk_plan_facts(df)
-        exchanges = facts["exchanges"]
-        global_windows = facts["global_windows"]
-        const_key_windows = facts["const_key_windows"]
-        wgl_partial = facts["wgl_partial"]
-    except Exception:  # pragma: no cover - py4j API drift safety net
-        exchanges = _count_exchanges(plan)
-        global_windows = None  # unknown under the string fallback
-        const_key_windows = None
-        wgl_partial = None
-    return {
-        "exchanges": exchanges,
-        "cartesian": "CartesianProduct" in plan,
-        "bnlj": "BroadcastNestedLoopJoin" in plan,
-        "python": python,
-        "global_windows": global_windows,
-        "const_key_windows": const_key_windows,
-        "wgl_partial": wgl_partial,
-    }
 
 
 def streaming_query_names() -> frozenset[str]:

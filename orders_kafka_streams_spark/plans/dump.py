@@ -13,7 +13,8 @@ import os
 import re
 import sys
 
-from .explain import explain_str
+from .budget import analyze_plan
+from .explain import explain_str, pushed_filters
 
 #: query → one-line statement of why this plan is right at scale; the
 #: keys are the queries PLANS.md documents
@@ -92,7 +93,7 @@ COMMENTARY = {
     "q_semantic_contamination": "benchmark broadcast, corpus scanned once map-side; min(struct) argmax partial-aggregates to one cell per vector before the exchange",
     "q_hubness": "sampled query side broadcast; k-occurrence = neighbor-keyed partial agg + TakeOrderedAndProject, never a global sort",
     "q_heldout_bigram": "train-half count relations joined onto the bigram stream on their keys (AQE picks broadcast while vocab fits); one doc agg",
-    "q_kcenter_coreset": "tournament FPS by default (r8, K > KCENTER_EXACT_MAX): one shuffle on p + per-partition Arrow-kernel exact FPS, then ONE task over the PxK winner pool — 2 jobs regardless of K; the K-1 driver-paced exact loop survives only as the tiny-K path behind KCENTER_EXACT_MAX, oracle dispatching with the engine",
+    "q_kcenter_coreset": "tournament FPS: one shuffle on p + per-partition Arrow-kernel exact FPS, then ONE task over the PxK winner pool — 2 jobs regardless of K, no driver-paced argmax loop",
     "q_mmr_rerank": "greedy re-rank over bounded per-query candidate groups: one Arrow grouped-map after the cell-sized candidate join; corpus-independent",
     "q_dedup_pagerank": "power iteration on the memoized near-dup pair relation: per-step edge join + contribution-cell agg, linear plan growth",
     "q_char_entropy": "char explode partial-aggregated to (doc, char) cells before the exchange; entropy fold per doc — cells in the shuffle, not characters",
@@ -191,27 +192,26 @@ COMMENTARY = {
 }
 
 
-def facts(plan: str) -> list[str]:
-    out = []
-    n_ex = plan.count("Exchange hashpartitioning")
-    out.append(f"hash exchanges: {n_ex}")
+def facts(df) -> list[str]:
+    plan = explain_str(df)
+    walked = analyze_plan(df)
+    out = [f"shuffle exchanges: {walked['exchanges']}"]
     if "ReusedExchange" in plan:
         out.append("reuses an exchange")
     n_b = plan.count("BroadcastHashJoin")
     if n_b:
         out.append(f"broadcast hash joins: {n_b}")
-    if "BroadcastNestedLoopJoin" in plan:
+    if walked["bnlj"]:
         out.append("broadcast nested-loop join (intentional: tiny side)")
     if "TakeOrderedAndProject" in plan:
         out.append("top-k via TakeOrderedAndProject (no full sort)")
-    pushed = re.findall(r"PushedFilters: \[([^\]]+)\]", plan)
-    n_pf = sum(len([p for p in g.split(",") if p.strip()]) for g in pushed)
+    n_pf = len(pushed_filters(df))
     if n_pf:
         out.append(f"pushed filters: {n_pf}")
     n_wsc = len(set(re.findall(r"WholeStageCodegen \((\d+)\)", plan)))
     if n_wsc:
         out.append(f"whole-stage codegen spans: {n_wsc}")
-    if "EvalPython" in plan or "MapInPandas" in plan or "FlatMapGroupsInPandas" in plan:
+    if walked["python"]:
         out.append("Arrow/pandas stage present (declared Python tier)")
     return out
 
@@ -224,13 +224,12 @@ def dossier_lines(spark, queries, sf_dir: str, name: str) -> list[str]:
     VERDICT r4 item 8)."""
     why = COMMENTARY[name]
     df = queries[name](spark, sf_dir)
-    plan = explain_str(df)
     return [
         f"## {name}",
         "",
         f"**Why this plan scales:** {why}.",
         "",
-        f"**Extracted facts:** {'; '.join(facts(plan))}.",
+        f"**Extracted facts:** {'; '.join(facts(df))}.",
         "",
         "```",
         explain_str(df, mode="formatted").strip()[:4000],

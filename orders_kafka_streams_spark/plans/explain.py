@@ -20,11 +20,6 @@ def explain_str(df: DataFrame, mode: str = "executed") -> str:
     return qe.executedPlan().toString()
 
 
-def exchanges_in(df: DataFrame) -> int:
-    """Hash-shuffle count in the physical plan — the scale cost driver."""
-    return explain_str(df).count("Exchange hashpartitioning")
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     plan = explain_str(df)
     out: list[str] = []

@@ -36,29 +36,6 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def env_int(name: str, default: int, lo: int, hi: int) -> int:
-    """Validated integer env override (r12, ADVICE r11): execution
-    knobs like OKSS_SEMDEDUP_CAP / OKSS_COOC_HEAVY_BASKET were bare
-    ``int()`` parses — garbage crashed at import with a bare
-    ValueError, and out-of-range values (cap ≤ 0, a quadratically
-    huge fan-out bound) silently broke decomposition invariants.
-    Fails at import with a message naming the variable and its sane
-    range. NOTE: tests/plan_budgets.json pins exchange counts under
-    the DEFAULTS — overriding a knob desyncs the committed plan
-    facts; that is a test-environment statement, not a correctness
-    one (the decompositions are exact at any in-range value)."""
-    raw = os.environ.get(name)
-    if raw is None:
-        return default
-    try:
-        v = int(raw)
-    except ValueError as e:
-        raise ValueError(f"{name}={raw!r} is not an integer") from e
-    if not (lo <= v <= hi):
-        raise ValueError(f"{name}={v} outside sane range [{lo}, {hi}]")
-    return v
-
-
 def _ship_package(spark: SparkSession) -> None:
     """Make this package importable in Python workers.
 

@@ -19,9 +19,6 @@ import sys
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2:])
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings".split()
-)
 
 
 def canon(v):
@@ -34,62 +31,6 @@ def canon(v):
     return str(v)
 
 
-def _spark_family(dt: str) -> str:
-    dt = dt.lower()
-    if dt in ("tinyint", "smallint", "int", "bigint"):
-        return "int"
-    if dt in ("float", "double"):
-        return "float"
-    if dt.startswith("decimal"):
-        return "decimal"
-    if dt.startswith(("array", "struct", "map")):
-        return "nested"
-    return dt
-
-
-def _arrow_family(dt: str) -> str:
-    dt = dt.lower()
-    # DuckDB HUGEINT (int128) surfaces as decimal128(38,0) via Arrow — the
-    # exact widening that broke q_scd2's driver hash in round 2.
-    if dt.startswith(("decimal128(38, 0)", "decimal256")):
-        return "int128"
-    if dt.startswith("decimal"):
-        return "decimal"
-    if dt.startswith(("int", "uint")):
-        return "int"
-    if dt in ("double", "float", "halffloat"):
-        return "float"
-    if dt in ("string", "large_string"):
-        return "string"
-    if dt.startswith("timestamp"):
-        return "timestamp"
-    if dt.startswith("date"):
-        return "date"
-    if dt in ("binary", "large_binary"):
-        return "binary"
-    if dt.startswith(("list", "large_list", "struct", "map")):
-        return "nested"
-    if dt == "bool":
-        return "boolean"
-    return dt
-
-
-def type_mismatches(spark_dtypes, arrow_schema):
-    """Column-level type-family diffs between a Spark result and its DuckDB
-    oracle (Arrow schema). Catches DuckDB's implicit widenings (un-cast
-    SUM -> HUGEINT/int128, DECIMAL creep) that value-string canonicalization
-    hides but the round driver's hash does not."""
-    st = dict(spark_dtypes)
-    out = []
-    for field in arrow_schema:
-        if field.name not in st:
-            continue  # column-name mismatch is caught by the column compare
-        sf, of = _spark_family(st[field.name]), _arrow_family(str(field.type))
-        if sf != of and not (sf.startswith("timestamp") and of == "timestamp"):
-            out.append(f"{field.name}: spark={st[field.name]} oracle={field.type}")
-    return out
-
-
 def main() -> int:
     spec = importlib.util.spec_from_file_location(
         "__spark_entry__", "/root/repo/__spark_entry__.py"
@@ -97,6 +38,9 @@ def main() -> int:
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 
+    # __spark_entry__ put the repo on sys.path; the harness needs it
+    from oracle_harness import type_mismatches
+    from orders_kafka_streams_spark import TABLES
     from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.master("local[8]").getOrCreate()

@@ -1,9 +1,10 @@
 """Local replica of the driver's DuckDB-oracle differential check.
 
 Runs a Spark query and its ANSI-SQL oracle side-by-side, then compares
-row count + order-insensitive canonicalized values (columns sorted by
-name, rows sorted by canonical form) — mirroring the driver's
-row-count/schema/value-hash gate so failures surface locally first.
+row count + column type families + order-insensitive canonicalized
+values (columns sorted by name, rows sorted by canonical form) —
+mirroring the driver's row-count/schema/value-hash gate so failures
+surface locally first.
 """
 
 from __future__ import annotations
@@ -14,18 +15,7 @@ import os
 
 import duckdb
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+from orders_kafka_streams_spark import TABLES
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -66,17 +56,77 @@ def _canon_rows(cols: list[str], rows: list[tuple]) -> list[tuple]:
     return sorted(tuple(canon(r[i]) for i in order) for r in rows)
 
 
+def _spark_family(dt: str) -> str:
+    dt = dt.lower()
+    if dt in ("tinyint", "smallint", "int", "bigint"):
+        return "int"
+    if dt in ("float", "double"):
+        return "float"
+    if dt.startswith("decimal"):
+        return "decimal"
+    if dt.startswith(("array", "struct", "map")):
+        return "nested"
+    return dt
+
+
+def _arrow_family(dt: str) -> str:
+    dt = dt.lower()
+    # DuckDB HUGEINT (int128) surfaces as decimal128(38,0) via Arrow — the
+    # exact widening that broke q_scd2's driver hash in round 2.
+    if dt.startswith(("decimal128(38, 0)", "decimal256")):
+        return "int128"
+    if dt.startswith("decimal"):
+        return "decimal"
+    if dt.startswith(("int", "uint")):
+        return "int"
+    if dt in ("double", "float", "halffloat"):
+        return "float"
+    if dt in ("string", "large_string"):
+        return "string"
+    if dt.startswith("timestamp"):
+        return "timestamp"
+    if dt.startswith("date"):
+        return "date"
+    if dt in ("binary", "large_binary"):
+        return "binary"
+    if dt.startswith(("list", "large_list", "struct", "map")):
+        return "nested"
+    if dt == "bool":
+        return "boolean"
+    return dt
+
+
+def type_mismatches(spark_dtypes, arrow_schema):
+    """Column-level type-family diffs between a Spark result and its DuckDB
+    oracle (Arrow schema). Catches DuckDB's implicit widenings (un-cast
+    SUM -> HUGEINT/int128, DECIMAL creep) that value-string canonicalization
+    hides but the round driver's hash does not."""
+    st = dict(spark_dtypes)
+    out = []
+    for field in arrow_schema:
+        if field.name not in st:
+            continue  # column-name mismatch is caught by the column compare
+        sf, of = _spark_family(st[field.name]), _arrow_family(str(field.type))
+        if sf != of and not (sf.startswith("timestamp") and of == "timestamp"):
+            out.append(f"{field.name}: spark={st[field.name]} oracle={field.type}")
+    return out
+
+
 def compare(spark_df, oracle_query: str, sf_dir: str, limit: int = 2_000_000):
-    """Return (ok, message). Compares column names, row counts, values."""
+    """Return (ok, message). Compares column names, type families, row
+    counts, values."""
     srows = [tuple(r) for r in spark_df.collect()]
     scols = list(spark_df.columns)
     con = duck_con(sf_dir)
-    cur = con.execute(oracle_query)
-    ocols = [d[0] for d in cur.description]
-    orows = cur.fetchall()
+    otable = con.execute(oracle_query).fetch_arrow_table()
+    ocols = otable.column_names
+    orows = [tuple(col[i].as_py() for col in otable.columns) for i in range(otable.num_rows)]
 
     if sorted(scols) != sorted(ocols):
         return False, f"columns differ: spark={sorted(scols)} oracle={sorted(ocols)}"
+    tmis = type_mismatches(spark_df.dtypes, otable.schema)
+    if tmis:
+        return False, f"type families differ: {tmis}"
     if len(srows) != len(orows):
         return False, f"row count differs: spark={len(srows)} oracle={len(orows)}"
     sc, oc = _canon_rows(scols, srows), _canon_rows(ocols, orows)

@@ -5,7 +5,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from orders_kafka_streams_spark.plans import exchanges_in, explain_str
+from orders_kafka_streams_spark.plans import explain_str
+from orders_kafka_streams_spark.plans.budget import analyze_plan
 from orders_kafka_streams_spark.sources.bucketing import bucketed_pair
 from orders_kafka_streams_spark.sources.tables import load_table
 
@@ -29,7 +30,7 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
 
         # same join on the unbucketed inputs shuffles both sides
         unbucketed = li.join(orders, li.l_orderkey == orders.o_orderkey)
-        assert exchanges_in(unbucketed) >= 2
+        assert analyze_plan(unbucketed)["exchanges"] >= 2
 
         # and the results agree
         a = joined.agg(F.count(F.lit(1)), F.round(F.sum("l_quantity"), 2)).collect()

@@ -1,47 +1,20 @@
-"""q_kcenter_coreset default-path dispatch (VERDICT r7 item 2): at the
-default K the query must run the tournament — a BOUNDED number of Spark
-jobs, never the K−1 driver-paced argmax loop — while the exact loop
-survives behind KCENTER_EXACT_MAX and still matches its own exact
-recursive-CTE oracle.
+"""q_kcenter_coreset runs the tournament (kcenter_batched): a BOUNDED
+number of Spark jobs at the default K, never a K−1 driver-paced
+argmax loop.
 """
 
 from __future__ import annotations
 
-import duckdb
-import numpy as np
-import pytest
-from pyspark.sql import types as T
-
-from orders_kafka_streams_spark.operators.clustering import (
-    KCENTER_EXACT_MAX,
-    KCENTER_K,
-    _kcenter_oracle,
-    _q_kcenter_coreset,
-    kcenter_exact,
-)
+from orders_kafka_streams_spark.operators.clustering import KCENTER_K, _q_kcenter_coreset
 
 SF = "/root/testdata/sf0.01"
-
-EMB_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("v", T.ArrayType(T.DoubleType())),
-    ]
-)
-
-
-def test_default_k_takes_the_tournament_path():
-    """The constant regime this gate protects: the shipped default K
-    must be above the exact-loop threshold, so the dispatcher sends it
-    to kcenter_batched."""
-    assert KCENTER_K > KCENTER_EXACT_MAX
 
 
 def test_default_path_job_count_is_k_independent(spark):
     """Execute the DEFAULT q_kcenter_coreset under a job group and
     count the jobs it launched: the tournament is O(1) jobs (shuffle +
     two Arrow stages + collect — plus the memo build on first touch),
-    while the exact loop would launch K−1 sequential argmax jobs on
+    while an exact FPS loop would launch K−1 sequential argmax jobs on
     top. The bound below fails the old path (8-pick exact = 7 argmax
     jobs + memo + collect > 8) but gives the tournament slack (AQE
     materializes each exchange as its own job — measured 5)."""
@@ -56,31 +29,3 @@ def test_default_path_job_count_is_k_independent(spark):
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(rows) == KCENTER_K
     assert len(jobs) <= 6, f"default k-center path launched {len(jobs)} jobs"
-
-
-def test_exact_loop_matches_recursive_cte_oracle_at_tiny_k(spark):
-    """kcenter_exact at K = KCENTER_EXACT_MAX vs the unrolled exact
-    oracle on a deterministic fixture — pins the tiny-K path's
-    semantics now that the default no longer exercises it."""
-    rng = np.random.default_rng(11)
-    V = rng.normal(size=(300, 64)).round(3)
-    rows = [(int(i), [float(x) for x in V[i]]) for i in range(300)]
-    emb = spark.createDataFrame(rows, EMB_SCHEMA)
-    got = sorted(
-        ((r.sel_rank, r.vec_id, r.min_d2) for r in
-         kcenter_exact(spark, emb, KCENTER_EXACT_MAX).collect())
-    )
-    import pandas as pd
-
-    con = duckdb.connect()
-    df_emb = pd.DataFrame(
-        {"vec_id": [int(i) for i in range(300)],
-         "v": [[float(x) for x in V[i]] for i in range(300)]}
-    )
-    con.register("df_emb", df_emb)
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT vec_id, v AS embedding FROM df_emb"
-    )
-    cur = con.execute(_kcenter_oracle(KCENTER_EXACT_MAX))
-    want = sorted((int(r[0]), int(r[1]), float(r[2])) for r in cur.fetchall())
-    assert got == want

@@ -2,27 +2,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from orders_kafka_streams_spark.plans import PeekListener, exchanges_in, pushed_filters
+from orders_kafka_streams_spark.plans import pushed_filters
+from orders_kafka_streams_spark.plans.budget import analyze_plan
 from orders_kafka_streams_spark.sources.tables import load_table
-
-
-def test_peek_metrics_collected_in_same_pass(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events")
-    listener = PeekListener()
-    df = listener.attach(
-        ev.filter(F.col("event_type") == "purchase"),
-        "after_filter",
-        F.count(F.lit(1)).alias("rows"),
-        F.round(F.avg("value"), 4).alias("avg_value"),
-    )
-    n = df.count()
-    got = listener.get("after_filter")
-    assert got["rows"] == n
-    assert got["avg_value"] > 0
 
 
 def test_explain_helpers(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
     df = li.filter(F.col("l_quantity") > 10).groupBy("l_returnflag").count()
-    assert exchanges_in(df) == 1
+    assert analyze_plan(df)["exchanges"] == 1
     assert any("GreaterThan(l_quantity" in f for f in pushed_filters(df))

@@ -40,3 +40,13 @@ def test_entry_smoke(spark):
         "processing_ms",
         "event_timestamp",
     }
+
+
+def test_compare_rejects_a_hugeint_widening(spark, sf_dir):
+    """An un-cast DuckDB SUM widens to HUGEINT: the values still
+    canonicalize equal, but the driver's hash rejects the type."""
+    df = spark.range(3).selectExpr("id AS n")
+    widened = "SELECT CAST(i AS HUGEINT) AS n FROM range(3) t(i)"
+    ok, msg = compare(df, widened, sf_dir)
+    assert not ok and "type families differ" in msg, msg
+    assert compare(df, "SELECT CAST(i AS BIGINT) AS n FROM range(3) t(i)", sf_dir)[0]

@@ -71,27 +71,6 @@ def test_heldout_bigram_no_cartesian(spark, sf_dir):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_kcenter_step_shape(spark, sf_dir):
-    """The per-step FPS argmax must be one TakeOrderedAndProject reduce
-    over the corpus relation: no window function, no cross join. (The
-    full query executes K driver-paced jobs of exactly this shape and
-    returns a K-row local relation, so the STEP plan is the thing to
-    pin.)"""
-    from pyspark.sql import functions as F
-
-    from orders_kafka_streams_spark.operators import clustering
-
-    emb = clustering._emb_double(spark, sf_dir)
-    zero = F.array(*[F.lit(0.0)] * clustering.EMB_DIM)
-    md = emb.select(
-        "vec_id", "v", F.round(clustering._d2(F.col("v"), zero), 6).alias("mind")
-    )
-    plan = plan_of(clustering._fps_argmax(md))
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "Window" not in plan, plan
-
-
 def test_kcenter_radius_monotone(spark, sf_dir):
     """The k-center coverage radius certificate: min_d2 at selection
     is non-increasing down the ranks (farthest-point invariant)."""

@@ -27,15 +27,15 @@ for p in (REPO, os.path.join(REPO, "tests")):
     if p not in sys.path:
         sys.path.insert(0, p)
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
-
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_path = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, "CORRECTNESS_FULL.json")
     only = set(sys.argv[3:])
 
-    from driver_sim import canon, type_mismatches
+    from driver_sim import canon
+    from oracle_harness import type_mismatches
+    from orders_kafka_streams_spark import TABLES
 
     spec = importlib.util.spec_from_file_location(
         "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
