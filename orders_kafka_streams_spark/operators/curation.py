@@ -36,6 +36,7 @@ from .presentation import cells_sorted
 
 from ..functions.portable import hash60, hash60_sql
 from ..functions.textfns import stopword_count, stopword_count_sql, tokens_sql
+from ..session import write_once_per_session
 from ..sources.tables import load_table
 from .dedup import _SHINGLED_CTE, _shingled_cached
 from .dedup import NGRAM_JACCARD_T as _NG_T
@@ -537,80 +538,25 @@ def packed_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def materialized_shard_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write the planned shards to parquet (one directory per shard,
-    rows sorted by pos_in_shard) ONCE per Spark application — the
-    q_jsonl_roundtrip marker pattern — and return the directory.
+    rows sorted by pos_in_shard) ONCE per Spark application
+    (:func:`..session.write_once_per_session`) and return the directory.
 
     Scale shape of the write: one hash exchange on shard (SEQ_SHARDS
     writer tasks, each streaming its sorted block straight to its
     partition directory); everything upstream is the packing + two-pass
     permutation plan. At 100 TB the only change is SEQ_SHARDS."""
-    import hashlib
-    import os
-    import tempfile
 
-    app_id = spark.sparkContext.applicationId
-    key = hashlib.md5(f"{sf_dir}:{app_id}".encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), "okss-shards")
-    out = os.path.join(base, key)
-    # stale-sibling sweep (the q_jsonl_roundtrip round-3-advice pattern
-    # — r10 review finding: it was omitted here): every Spark
-    # application writes a corpus-sized directory under its own key,
-    # so prior sessions' copies would accumulate in /tmp forever.
-    # Touch our own dir first so the age gate never sweeps a LIVE
-    # payload of a long-running session. A sibling is swept only when
-    # it is BOTH old AND its owning driver process is dead (r10 advice:
-    # age alone could sweep a concurrent session's files mid-query —
-    # its dir mtime only refreshes when it re-calls this function, but
-    # a lazy DataFrame can hold the paths far longer). The owner PID is
-    # recorded in an _OWNER file at dir creation; a missing/unreadable
-    # _OWNER (pre-r11 layout, or a crash before it was written) falls
-    # back to the age gate alone.
-    if os.path.isdir(out):
-        os.utime(out, None)
-    if os.path.isdir(base):
-        import shutil
-        import time
-
-        def _owner_alive(p: str) -> bool:
-            try:
-                with open(os.path.join(p, "_OWNER")) as fh:
-                    pid = int(fh.read().strip())
-            except (OSError, ValueError):
-                return False  # unknown owner → age gate decides
-            return os.path.exists(f"/proc/{pid}")
-
-        for d in os.listdir(base):
-            p = os.path.join(base, d)
-            try:
-                stale = d != key and time.time() - os.path.getmtime(p) > 3600
-            except OSError:
-                continue
-            if stale and not _owner_alive(p):
-                shutil.rmtree(p, ignore_errors=True)
-    marker = os.path.join(out, "_WRITTEN")
-    if not os.path.exists(marker):
-        # Crash contract (tests/test_crash_recovery.py): the marker is
-        # written strictly AFTER the parquet job succeeds, so a crash
-        # anywhere mid-write leaves a marker-less directory that the
-        # next call rewrites wholesale (overwrite mode clears partial
-        # output) — rerun-to-converge, never a partial read.
-        rel = packed_shard_plan(spark, sf_dir)
+    def write(out: str) -> None:
         (
-            rel.repartition("shard")
+            packed_shard_plan(spark, sf_dir)
+            .repartition("shard")
             .sortWithinPartitions("pos_in_shard")
-            .write.mode("overwrite")
+            .write.mode("append")
             .partitionBy("shard")
             .parquet(out)
         )
-        open(marker, "w").close()
-    # liveness beacon for SIBLING sessions' sweeps — written after the
-    # (re)write because overwrite mode clears the directory; recreated
-    # on every call so a restarted session re-claims its key.
-    owner_f = os.path.join(out, "_OWNER")
-    if not os.path.exists(owner_f):
-        with open(owner_f, "w") as fh:
-            fh.write(str(os.getpid()))
-    return out
+
+    return write_once_per_session(spark, "okss-shards", sf_dir, write)
 
 
 def _q_write_shards(spark: SparkSession, sf_dir: str) -> DataFrame:

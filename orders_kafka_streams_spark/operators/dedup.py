@@ -137,10 +137,7 @@ def _memo_persist(spark: SparkSession, sf_dir: str, tag: str, build) -> DataFram
             del _PERSIST_MEMO[stale]
         while len(_PERSIST_MEMO) >= _PERSIST_MEMO_MAX:
             _, lru = _PERSIST_MEMO.popitem(last=False)
-            try:
-                lru.unpersist()
-            except Exception:
-                pass  # session already stopped; nothing to release
+            lru.unpersist()  # the live application's entry (stale ones went above)
         df = build().persist()
         # Materialize EAGERLY: the memo is a shared checkpoint artifact,
         # so its build cost belongs to the first builder's CONSTRUCTION

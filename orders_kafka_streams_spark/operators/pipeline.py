@@ -45,6 +45,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.portable import epoch_ms
+from ..session import fresh_session_dir
 from ..sources.tables import load_table
 
 #: batch stand-ins for the reference's event types (FIXTURES.md §B)
@@ -478,19 +479,11 @@ def _q_pysource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_pysource_batch (shared oracle), so the hash match proves the
     sink round-trips rows losslessly and the manifest names exactly
     the committed task files."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources.pysource import PYSRC_N, read_manifest, register, register_sink
 
     register(spark)
     register_sink(spark)
-    app_id = spark.sparkContext.applicationId
-    key = hashlib.md5(f"{sf_dir}:{app_id}".encode()).hexdigest()[:8]
-    out = os.path.join(tempfile.gettempdir(), "okss-pysink", key)
-    shutil.rmtree(out, ignore_errors=True)
+    out = fresh_session_dir(spark, "okss-pysink", sf_dir)
     ev = spark.read.format("order_events").option("n", PYSRC_N).load()
     ev.write.format("jsonl_manifest").option("path", out).mode("append").save()
     files, _ = read_manifest(out)

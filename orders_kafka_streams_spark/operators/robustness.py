@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from .presentation import cells_sorted
 from pyspark.sql import types as T
 
+from ..session import write_once_per_session
 from ..sources.json_edge import decode_json
 from ..sources.tables import load_table
 
@@ -578,9 +579,7 @@ def _q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (to_json / from_json inside whole-stage codegen); the only
     shuffle is the final per-type checksum agg. Output: one row per
     event_type with counts/sums plus the corrupt-line count."""
-    import hashlib
     import os
-    import tempfile
 
     from ..functions.portable import epoch_ms
 
@@ -597,37 +596,13 @@ def _q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("value")
     )
-    app_id = spark.sparkContext.applicationId
-    key = hashlib.md5(f"{sf_dir}:{app_id}".encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), "okss-jsonl")
-    out = os.path.join(base, key)
-    # each Spark application gets a fresh key, so prior sessions'
-    # corpus-sized serializations would accumulate in /tmp forever —
-    # drop STALE siblings (age-gated). A session running longer than
-    # the gate would otherwise have its LIVE payload swept by a
-    # younger sibling (round-3 advice), so every reuse first touches
-    # our own directory's mtime: as long as a session keeps using its
-    # payload, the age gate never sees it as stale.
-    if os.path.isdir(out):
-        os.utime(out, None)
-    if os.path.isdir(base):
-        import shutil
-        import time
 
-        for d in os.listdir(base):
-            p = os.path.join(base, d)
-            try:
-                stale = d != key and time.time() - os.path.getmtime(p) > 3600
-            except OSError:
-                continue
-            if stale:
-                shutil.rmtree(p, ignore_errors=True)
-    marker = os.path.join(out, "_WRITTEN")  # _-prefixed: reader skips it
-    if not os.path.exists(marker):
-        payload.write.mode("overwrite").text(out)
+    def write(out: str) -> None:
+        payload.write.mode("append").text(out)
         with open(os.path.join(out, "poison.txt"), "w") as fh:
             fh.write("".join(line + "\n" for line in JSONL_POISON))
-        open(marker, "w").close()
+
+    out = write_once_per_session(spark, "okss-jsonl", sf_dir, write)
     raw = spark.read.text(out)
     good, corrupt = decode_json(raw, EVENT_JSON_SCHEMA, "value")
     g = good.groupBy("event_type").agg(

@@ -1,9 +1,11 @@
 """Driver-facing queries that execute THROUGH the streaming engine.
 
-Each callable builds a readStream plan, drains it into a memory sink
-(processAllAvailable), and returns the sink table — so the driver's
-oracle diff checks real Structured Streaming semantics (watermark
-finalization, stream-stream join state) against ANSI SQL:
+Each callable builds a readStream plan, drains it — into a memory sink
+(``run_to_memory``), or as an availableNow foreachBatch gate through
+:func:`_drain` (per-batch parquet appends via :func:`_ingest_sink`) —
+and returns the drained result, so the driver's oracle diff checks
+real Structured Streaming semantics (watermark finalization,
+stream-stream join state) against ANSI SQL:
 
 - q_stream_win_tumble: append-mode watermarked tumble — emits exactly
   the windows the watermark closed; the oracle applies the same
@@ -27,8 +29,10 @@ from .presentation import cells_sorted
 from ..sources.tables import load_table
 
 from ..functions.portable import epoch_ms
+from ..session import fresh_session_dir
 from ..streaming.pipeline import (
     events_file_stream,
+    process_all_available,
     run_to_memory,
     stream_dead_letter,
     stream_pair_join,
@@ -43,42 +47,38 @@ DL_WATERMARK_MS = 600_000  # stream_dead_letter's 10-minute delay
 DRAIN_TIMEOUT_S = 300
 
 
-def _drain(q, tag: str) -> None:
-    """``awaitTermination`` with the result CHECKED — a drain that
-    outlives the cap would otherwise race the read-back and silently
-    return a partial index/pair set with no error (review finding)."""
-    if not q.awaitTermination(DRAIN_TIMEOUT_S):
+def _drain(writer, tag: str) -> None:
+    """Start ``writer`` as an availableNow query and wait for it, with
+    the completion CHECKED — a drain that outlives the cap would
+    otherwise race the read-back and silently return a partial
+    index/pair set with no error. The query is stopped on every exit."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        if not q.awaitTermination(DRAIN_TIMEOUT_S):
+            raise TimeoutError(f"{tag}: stream drain did not complete in {DRAIN_TIMEOUT_S}s")
+    finally:
         q.stop()
-        raise TimeoutError(f"{tag}: stream drain did not complete in {DRAIN_TIMEOUT_S}s")
 
 
 def _ingest_sink(spark: SparkSession, sf_dir: str, tag: str, stream, per_batch):
-    """The shared foreachBatch ingest scaffold (review finding: it had
-    been copy-pasted per gate): session-scoped tempdir keyed on
-    (sf_dir, app_id), per-micro-batch ``per_batch(batch)`` transform
-    appended as parquet, availableNow drain with the completion
-    CHECKED, then the assembled output read back. ``per_batch`` owns
-    any repartition of the (often 1-partition) file batch."""
-    import hashlib
+    """The one foreachBatch ingest scaffold: each micro-batch's
+    ``per_batch(batch)`` is appended as parquet to a fresh session dir
+    under ``tag`` (a failed drain raises; the next call starts from an
+    empty dir), the drain is :func:`_drain`-checked, and the assembled
+    output is read back. ``per_batch`` owns any repartition of the
+    (often 1-partition) file batch."""
     import os
-    import shutil
-    import tempfile
 
-    app_id = spark.sparkContext.applicationId
-    key = hashlib.md5(f"{sf_dir}:{app_id}".encode()).hexdigest()[:8]
-    out_path = os.path.join(tempfile.gettempdir(), tag, key)
-    shutil.rmtree(out_path, ignore_errors=True)
+    out_path = fresh_session_dir(spark, tag, sf_dir)
 
     def _fb(batch, batch_id: int) -> None:
         per_batch(batch).write.mode("append").parquet(out_path)
 
-    q = stream.writeStream.foreachBatch(_fb).trigger(availableNow=True).start()
-    _drain(q, tag)
-    if not os.path.isdir(out_path):
+    _drain(stream.writeStream.foreachBatch(_fb), tag)
+    if not [n for n in os.listdir(out_path) if not n.startswith("_")]:
         # zero micro-batches fired, so no parquet was ever written —
         # surface a clear empty-stream signal instead of the opaque
-        # path-not-found AnalysisException the read-back would throw
-        # (ADVICE r8)
+        # AnalysisException the read-back would throw (ADVICE r8)
         raise RuntimeError(
             f"{tag}: stream produced no micro-batches (empty source at "
             f"{sf_dir}) — nothing was written to {out_path}"
@@ -117,8 +117,6 @@ def _q_stream_dead_letter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_stream_pair_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_file_stream(spark, sf_dir)
     tab = run_to_memory(pair_match_stateful(ev), "pair_match")
-    # single-batch drain: ProcessingTimeTimeout never fires, so the
-    # output is exactly the match stream (no expiry rows).
     return spark.table(tab)
 
 
@@ -182,27 +180,15 @@ def _q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # event stream into the effective-dated dimension; hash-diffed
     # against the BATCH scd2 oracle (the merge invariant is also
     # batch-split-tested in tests/test_scd2_stream.py).
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from ..streaming.scd2_merge import scd2_sink
 
     ev = events_file_stream(spark, sf_dir)
-    # key includes the Spark applicationId so concurrent sessions
-    # against the same sf_dir get isolated dimension directories (one
-    # session's rmtree/swap can't race another's running read)
-    app_id = spark.sparkContext.applicationId
-    key = hashlib.md5(f"{sf_dir}:{app_id}".encode()).hexdigest()[:8]
-    dim_path = os.path.join(tempfile.gettempdir(), "okss-scd2", key)
-    shutil.rmtree(dim_path, ignore_errors=True)
-    q = (
-        ev.writeStream.foreachBatch(scd2_sink(dim_path))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, "okss-scd2")
+    # the snapshot swap renames beside its path, so the dimension lives
+    # one level inside the session dir (whose _OWNER record must stay)
+    dim_path = os.path.join(fresh_session_dir(spark, "okss-scd2", sf_dir), "dim")
+    _drain(ev.writeStream.foreachBatch(scd2_sink(dim_path)), "okss-scd2")
     return spark.read.parquet(dim_path)
 
 
@@ -1055,21 +1041,14 @@ def _q_stream_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     and hash-matches the full-table recompute oracle (shared with
     q_ivm_refresh). Per-batch cost: the batch scan + a cell-sized
     merge; history is never rescanned."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from ..streaming.ivm import ivm_sink
     from ..streaming.pipeline import documents_file_stream
 
     docs = documents_file_stream(spark, sf_dir)
-    app_id = spark.sparkContext.applicationId
-    key = hashlib.md5(f"{sf_dir}:{app_id}".encode()).hexdigest()[:8]
-    view_path = os.path.join(tempfile.gettempdir(), "okss-ivm", key)
-    shutil.rmtree(view_path, ignore_errors=True)
-    q = docs.writeStream.foreachBatch(ivm_sink(view_path)).trigger(availableNow=True).start()
-    _drain(q, "okss-ivm")
+    view_path = os.path.join(fresh_session_dir(spark, "okss-ivm", sf_dir), "view")
+    _drain(docs.writeStream.foreachBatch(ivm_sink(view_path)), "okss-ivm")
     cells = spark.read.parquet(view_path)
     return cells.select(
         "source",
@@ -1094,10 +1073,7 @@ def _q_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_stream_win_tumble's, flipped). Scale shape: the state source
     reads per-partition state files in parallel; nothing rescans the
     input."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     ev = events_file_stream(spark, sf_dir)
     agg = (
@@ -1105,18 +1081,11 @@ def _q_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 minute"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    app_id = spark.sparkContext.applicationId
-    key = hashlib.md5(f"{sf_dir}:{app_id}".encode()).hexdigest()[:8]
-    ckpt = os.path.join(tempfile.gettempdir(), "okss-stateinspect", key)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    ckpt = os.path.join(fresh_session_dir(spark, "okss-stateinspect", sf_dir), "ckpt")
+    _drain(
+        agg.writeStream.outputMode("append").format("noop").option("checkpointLocation", ckpt),
+        "okss-stateinspect",
     )
-    _drain(q, "okss-stateinspect")
     st = spark.read.format("statestore").load(ckpt)
     return st.select(
         epoch_ms(F.col("key.window.start")).alias("wstart_ms"),
@@ -1135,28 +1104,20 @@ def _q_stream_pysource(spark: SparkSession, sf_dir: str) -> DataFrame:
     the assembled rows aggregate to the SAME per-facility relation as
     the batch read — shared oracle, so the hash match verifies offset
     tracking and replay safety, not just row generation."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from ..sources.pysource import PYSRC_N, register
 
     register(spark)
     ev = spark.readStream.format("order_events").option("n", PYSRC_N).load()
-    app_id = spark.sparkContext.applicationId
-    key = hashlib.md5(f"{sf_dir}:{app_id}".encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), "okss-pysource", key)
+    base = fresh_session_dir(spark, "okss-pysource", sf_dir)
     out_path, ckpt = os.path.join(base, "rows"), os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-    q = (
+    process_all_available(
         ev.writeStream.format("parquet")
         .option("path", out_path)
         .option("checkpointLocation", ckpt)
         .start()
     )
-    q.processAllAvailable()
-    q.stop()
     rows = spark.read.parquet(out_path)
     orders = rows.groupBy("order_id", "facility").agg(
         (F.max("ts_ms") - F.min("ts_ms")).alias("processing_ms")
@@ -1181,10 +1142,7 @@ def _q_stream_pysource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest-committed files and aggregating must equal the batch
     read (shared oracle): offsets, epochs, and the commit protocol
     all verified by one hash."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from ..sources.pysource import (
         PYSRC_N,
@@ -1195,21 +1153,16 @@ def _q_stream_pysource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register(spark)
     register_sink(spark)
-    app_id = spark.sparkContext.applicationId
-    key = hashlib.md5(f"{sf_dir}:{app_id}".encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), "okss-pysink-stream", key)
+    base = fresh_session_dir(spark, "okss-pysink-stream", sf_dir)
     out, ckpt = os.path.join(base, "data"), os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
+    os.makedirs(out)
     ev = spark.readStream.format("order_events").option("n", PYSRC_N).load()
-    q = (
+    process_all_available(
         ev.writeStream.format("jsonl_manifest")
         .option("path", out)
         .option("checkpointLocation", ckpt)
         .start()
     )
-    q.processAllAvailable()
-    q.stop()
     files, _ = read_manifest(out)
     rows = spark.read.json(files)
     orders = rows.groupBy("order_id", "facility").agg(
@@ -1238,34 +1191,21 @@ def _q_stream_excise_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     batched (tests/test_excise_spans.py pins batch-split invariance)
     and the assembled output hash-matches the batch oracle restricted
     to delta docs."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..streaming.pipeline import documents_file_stream
     from .dedup import DELTA_MOD, _excise_shared, excise_spans_of, shingle_pos_of
 
     docs = documents_file_stream(spark, sf_dir).filter(
         F.col("doc_id") % DELTA_MOD == DELTA_MOD - 1
     )
-    app_id = spark.sparkContext.applicationId
-    key = hashlib.md5(f"{sf_dir}:{app_id}".encode()).hexdigest()[:8]
-    out_path = os.path.join(tempfile.gettempdir(), "okss-excise", key)
-    shutil.rmtree(out_path, ignore_errors=True)
-
     shared = _excise_shared(spark, sf_dir)  # static, built pre-stream
 
-    def probe(batch, batch_id: int) -> None:
+    def probe(batch):
         # spread the (possibly 1-partition) file batch before the
         # shingle/window work — the sf1 foreachBatch lesson
         batch = batch.repartition(spark.sparkContext.defaultParallelism)
-        spans = excise_spans_of(shingle_pos_of(batch.select("doc_id", "text")), shared)
-        spans.write.mode("append").parquet(out_path)
+        return excise_spans_of(shingle_pos_of(batch.select("doc_id", "text")), shared)
 
-    q = docs.writeStream.foreachBatch(probe).trigger(availableNow=True).start()
-    _drain(q, "okss-excise")
-    return spark.read.parquet(out_path)
+    return _ingest_sink(spark, sf_dir, "okss-excise", docs, probe)
 
 
 def _q_stream_exact_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1281,11 +1221,6 @@ def _q_stream_exact_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
     batched (pinned in tests/test_exact_substrings.py) and the
     assembled output hash-matches the batch oracle restricted to delta
     docs."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..streaming.pipeline import documents_file_stream
     from .dedup import (
         DELTA_MOD,
@@ -1297,23 +1232,15 @@ def _q_stream_exact_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_file_stream(spark, sf_dir).filter(
         F.col("doc_id") % DELTA_MOD == DELTA_MOD - 1
     )
-    app_id = spark.sparkContext.applicationId
-    key = hashlib.md5(f"{sf_dir}:{app_id}".encode()).hexdigest()[:8]
-    out_path = os.path.join(tempfile.gettempdir(), "okss-exsub", key)
-    shutil.rmtree(out_path, ignore_errors=True)
-
     shared = _exsub_shared(spark, sf_dir)  # static, built pre-stream
 
-    def probe(batch, batch_id: int) -> None:
+    def probe(batch):
         batch = batch.repartition(spark.sparkContext.defaultParallelism)
-        spans = exact_substring_spans(
+        return exact_substring_spans(
             exsub_pos_of(batch.select("doc_id", "text")), shared
         )
-        spans.write.mode("append").parquet(out_path)
 
-    q = docs.writeStream.foreachBatch(probe).trigger(availableNow=True).start()
-    _drain(q, "okss-exsub")
-    return spark.read.parquet(out_path)
+    return _ingest_sink(spark, sf_dir, "okss-exsub", docs, probe)
 
 
 def _q_stream_apply_excision(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1424,21 +1351,11 @@ def _q_stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     depends only on that doc and the static benchmark set, so batch
     slicing is invisible — the ingest-time gate equals the offline
     sweep."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..streaming.pipeline import documents_file_stream
-    from .curation import BENCH_DOCS
+    from .curation import BENCH_DOCS, CONTAM_OVERLAP_T
     from .dedup import exploded_shingles_of
 
     docs = documents_file_stream(spark, sf_dir).filter(F.col("doc_id") >= BENCH_DOCS)
-    app_id = spark.sparkContext.applicationId
-    key = hashlib.md5(f"{sf_dir}:{app_id}".encode()).hexdigest()[:8]
-    out_path = os.path.join(tempfile.gettempdir(), "okss-contam", key)
-    shutil.rmtree(out_path, ignore_errors=True)
-
     # the benchmark set is STATIC — build (and persist) it once before
     # the stream starts. Shingled DIRECTLY from the BENCH_DOCS rows of
     # the documents table (r4, VERDICT item 4): deriving it from the
@@ -1457,14 +1374,14 @@ def _q_stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
 
-    def probe(batch, batch_id: int) -> None:
+    def probe(batch):
         # spread the (possibly 1-partition) file batch, then shingle
         # through the single-Generate form: the previous array-form
         # shingle re-evaluated the tokenize→shingle→hash chain up to
         # 3x per row (size filter + explode) — the 14 s sf1 tail the
         # r3 verdict flagged; this is the same 50k-doc batch in ~1 s.
         batch = batch.repartition(spark.sparkContext.defaultParallelism)
-        per_doc = (
+        return (
             exploded_shingles_of(batch.select("doc_id", "text"))
             .join(F.broadcast(bench), "g", "left")
             .groupBy("doc_id")
@@ -1473,17 +1390,12 @@ def _q_stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).alias("tot"),
             )
         )
-        per_doc.write.mode("append").parquet(out_path)
 
-    q = docs.writeStream.foreachBatch(probe).trigger(availableNow=True).start()
-    _drain(q, "okss-contam")
-    bench.unpersist()
-
-    from .curation import CONTAM_OVERLAP_T
-
-    per_doc = spark.read.parquet(out_path).withColumn(
-        "overlap", F.col("k") / F.col("tot").cast("double")
-    )
+    try:
+        per_doc = _ingest_sink(spark, sf_dir, "okss-contam", docs, probe)
+    finally:
+        bench.unpersist()
+    per_doc = per_doc.withColumn("overlap", F.col("k") / F.col("tot").cast("double"))
     src = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     return per_doc.join(src, "doc_id").groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1538,46 +1450,32 @@ def _q_stream_semantic_contamination(spark: SparkSession, sf_dir: str) -> DataFr
     keeps paraphrase-level eval contamination out of a continuously
     growing corpus — the embedding-space twin of
     q_stream_contamination's trigram probe."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..streaming.pipeline import embeddings_file_stream
     from .similarity import _dvec, _norm, _prepared, sem_bench_side, sem_contam_flags
 
     emb = embeddings_file_stream(spark, sf_dir)
-    app_id = spark.sparkContext.applicationId
-    key = hashlib.md5(f"{sf_dir}:{app_id}".encode()).hexdigest()[:8]
-    out_path = os.path.join(tempfile.gettempdir(), "okss-sem-contam", key)
-    shutil.rmtree(out_path, ignore_errors=True)
-
     # the benchmark suite is STATIC — build it once before the stream
     bench = sem_bench_side(_prepared(spark, sf_dir)).persist()
 
-    def probe(batch, batch_id: int) -> None:
+    def probe(batch):
         # repartition: a file-source micro-batch arrives with the
         # FILE's partitioning (often 1), which would run the
         # |batch|×|bench| scoring single-threaded (measured 130 s vs
-        # 16 s at sf1); persist so the norm fold isn't re-inlined into
-        # the per-pair cosine by CollapseProject (the _tokenized trap)
+        # 16 s at sf1). The norm is computed once per corpus row, in
+        # the projection below the cross join.
         corpus = (
             batch.repartition(spark.sparkContext.defaultParallelism)
             .filter(F.col("label") != 0)
             .select("vec_id", _dvec().alias("e"))
             .withColumn("nrm", _norm(F.col("e")))
-            .persist()
         )
-        try:
-            # scoring = the batch sweep's exact shared block (same oracle)
-            sem_contam_flags(corpus, bench).write.mode("append").parquet(out_path)
-        finally:
-            corpus.unpersist()
+        # scoring = the batch sweep's exact shared block (same oracle)
+        return sem_contam_flags(corpus, bench)
 
-    q = emb.writeStream.foreachBatch(probe).trigger(availableNow=True).start()
-    _drain(q, "okss-sem-contam")
-    bench.unpersist()
-    return spark.read.parquet(out_path)
+    try:
+        return _ingest_sink(spark, sf_dir, "okss-sem-contam", emb, probe)
+    finally:
+        bench.unpersist()
 
 
 QUERIES = {

@@ -7,6 +7,10 @@ Two entry points:
   *existing* session (the correctness driver owns its own session; we
   must not assume its build-time config).
 
+Every per-session scratch directory comes from :func:`session_dir`
+(or its two forms :func:`fresh_session_dir` and
+:func:`write_once_per_session`), which also owns their cleanup.
+
 Scale stance (100 TB): everything here is runtime-settable and safe on
 a real cluster — AQE for runtime re-planning + skew joins, partition
 coalescing, and a UTC session timezone so results are engine-portable.
@@ -14,7 +18,12 @@ coalescing, and a UTC session timezone so results are engine-portable.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import tempfile
+import time
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
@@ -49,7 +58,6 @@ def _ship_package(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, marker, False):
         return
-    import tempfile
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
@@ -65,24 +73,100 @@ def _ship_package(spark: SparkSession) -> None:
     setattr(sc, marker, True)
 
 
+#: a sibling scratch dir untouched this long may be swept (owner dead)
+SCRATCH_IDLE_S = 3600
+_OWNER = "_OWNER"
+
+
+def _owner_alive(path: str) -> bool:
+    try:
+        with open(os.path.join(path, _OWNER)) as fh:
+            pid = int(fh.read().strip())
+    except (OSError, ValueError):
+        return False  # no readable owner record: the age gate decides
+    return os.path.exists(f"/proc/{pid}")
+
+
+def session_dir(spark: SparkSession, namespace: str, sf_dir: str) -> str:
+    """This session's scratch directory for ``namespace``:
+    ``<tmp>/<namespace>/<md5(sf_dir:app_id)[:8]>``, created if missing.
+
+    The key includes the Spark applicationId, so concurrent sessions on
+    one sf_dir never share a directory — and every finished session
+    leaves one behind. Each call therefore records the driver pid in
+    ``_OWNER`` (``_``-prefixed, so Spark's readers skip it), touches
+    the directory's mtime, and removes a sibling only when it is BOTH
+    idle for more than :data:`SCRATCH_IDLE_S` AND its owner process is
+    gone: a live session's lazy DataFrame can hold its paths far longer
+    than it calls here."""
+    app_id = spark.sparkContext.applicationId
+    key = hashlib.md5(f"{sf_dir}:{app_id}".encode()).hexdigest()[:8]
+    base = os.path.join(tempfile.gettempdir(), namespace)
+    out = os.path.join(base, key)
+    os.makedirs(out, exist_ok=True)
+    with open(os.path.join(out, _OWNER), "w") as fh:
+        fh.write(str(os.getpid()))
+    os.utime(out, None)
+    now = time.time()
+    for d in os.listdir(base):
+        p = os.path.join(base, d)
+        try:
+            idle = d != key and now - os.path.getmtime(p) > SCRATCH_IDLE_S
+        except OSError:
+            continue  # swept concurrently
+        if idle and not _owner_alive(p):
+            shutil.rmtree(p, ignore_errors=True)
+    return out
+
+
+def _clear(out: str) -> None:
+    """Empty a session dir, keeping its ``_OWNER`` record."""
+    for name in os.listdir(out):
+        if name == _OWNER:
+            continue
+        p = os.path.join(out, name)
+        if os.path.isdir(p):
+            shutil.rmtree(p)
+        else:
+            os.remove(p)
+
+
+def fresh_session_dir(spark: SparkSession, namespace: str, sf_dir: str) -> str:
+    """:func:`session_dir`, emptied: for an output each call rebuilds."""
+    out = session_dir(spark, namespace, sf_dir)
+    _clear(out)
+    return out
+
+
+def write_once_per_session(
+    spark: SparkSession, namespace: str, sf_dir: str, write: Callable[[str], None]
+) -> str:
+    """:func:`session_dir` holding ``write(path)``'s output, written once
+    per session. ``write`` must ADD to ``path`` (append mode): the
+    directory exists and holds ``_OWNER``. ``_WRITTEN`` is recorded
+    only after ``write`` returns, so a crash mid-write leaves an
+    unmarked directory that the next call empties and rewrites —
+    rerun-to-converge, never a partial read."""
+    out = session_dir(spark, namespace, sf_dir)
+    marker = os.path.join(out, "_WRITTEN")
+    if not os.path.exists(marker):
+        _clear(out)
+        write(out)
+        open(marker, "w").close()
+    return out
+
+
 def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSession:
     """Apply runtime confs to an existing session (driver- or test-owned)."""
     for k, v in _RUNTIME_CONF.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:  # pragma: no cover - conf may be static in some builds
-            pass
+        spark.conf.set(k, v)
     if shuffle_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    else:
-        try:
-            # a driver-owned session may come in with Spark's 200 default —
-            # wrong in both directions locally; right-size to the host once,
-            # without clobbering a deliberately configured value.
-            if spark.conf.get("spark.sql.shuffle.partitions") == "200":
-                spark.conf.set("spark.sql.shuffle.partitions", str(default_parallelism()))
-        except Exception:  # pragma: no cover
-            pass
+    elif spark.conf.get("spark.sql.shuffle.partitions") == "200":
+        # a driver-owned session may come in with Spark's 200 default —
+        # wrong in both directions locally; right-size to the host once,
+        # without clobbering a deliberately configured value.
+        spark.conf.set("spark.sql.shuffle.partitions", str(default_parallelism()))
     try:
         _ship_package(spark)
     except Exception:  # pragma: no cover - best-effort; kernels are self-contained

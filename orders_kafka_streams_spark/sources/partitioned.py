@@ -22,41 +22,13 @@ date-keyed topic retention.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import shutil
-import tempfile
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import write_once_per_session
 from .tables import load_table
 
 PARTITION_COL = "event_date"
-
-
-def session_layout_dir(spark: SparkSession, namespace: str, sf_dir: str) -> str:
-    """Per-(application, sf) temp directory with the jsonl-roundtrip
-    lifecycle: touch own mtime on reuse, then age-sweep stale siblings
-    (>1 h untouched) so corpus-sized layouts don't accumulate across
-    sessions while a long-running concurrent session keeps its own."""
-    app_id = spark.sparkContext.applicationId
-    key = hashlib.md5(f"{sf_dir}:{app_id}".encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), namespace)
-    out = os.path.join(base, key)
-    if os.path.isdir(out):
-        os.utime(out, None)
-    if os.path.isdir(base):
-        for d in os.listdir(base):
-            p = os.path.join(base, d)
-            try:
-                stale = d != key and time.time() - os.path.getmtime(p) > 3600
-            except OSError:
-                continue
-            if stale:
-                shutil.rmtree(p, ignore_errors=True)
-    return out
 
 
 def partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -64,17 +36,17 @@ def partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (written once per session), read back through the partition-aware
     reader. ``event_date`` becomes a partition DIRECTORY column —
     the scan prunes on it before reading a byte of data."""
-    out = session_layout_dir(spark, "okss-partitioned", sf_dir)
-    marker = os.path.join(out, "_LAYOUT_DONE")
-    if not os.path.exists(marker):
-        ev = load_table(spark, sf_dir, "events")
+
+    def write(out: str) -> None:
         (
-            ev.withColumn(PARTITION_COL, F.to_date("ts"))
-            .write.mode("overwrite")
+            load_table(spark, sf_dir, "events")
+            .withColumn(PARTITION_COL, F.to_date("ts"))
+            .write.mode("append")
             .partitionBy(PARTITION_COL)
             .parquet(out)
         )
-        open(marker, "w").close()
+
+    out = write_once_per_session(spark, "okss-partitioned", sf_dir, write)
     return spark.read.parquet(out)
 
 

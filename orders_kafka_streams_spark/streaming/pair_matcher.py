@@ -1,17 +1,22 @@
 """Fidelity pair-matcher: applyInPandasWithState (SURVEY §2.4 / §2.8).
 
-Replicates the reference's Processor-API semantics EXACTLY
-(OrderProcessor.java:99-206):
+Replicates the reference's per-key Processor-API semantics
+(OrderProcessor.java:99-154):
 
 - buffer whichever side arrives first in keyed state
   (put, OrderProcessor.java:152);
 - duplicate placed events overwrite — last-writer-wins
   (OrderProcessor.java:114);
 - on completion emit one ``order.info`` and DELETE state
-  (OrderProcessor.java:146-149);
-- unmatched state expires after the processing window via timeout —
-  the punctuator's cleanup scan (OrderProcessor.java:161-206) becomes
-  a per-key ProcessingTimeTimeout: O(expired keys), not O(state)/min.
+  (OrderProcessor.java:146-149).
+
+It arms no timeout (GroupStateTimeout.NoTimeout): with timers armed
+the engine must run a micro-batch per trigger just to evaluate them,
+so a drain-style test/oracle run would never settle. The reference's
+punctuator expiry (OrderProcessor.java:161-206) is therefore not
+reproduced here; unmatched placed state stays until its key completes.
+The join-based dead-letter route (streaming/pipeline.stream_dead_letter)
+is the watermark-driven expiry.
 
 Use this only when emit-on-completion timing fidelity matters; the
 idiomatic form is the stream-stream join in streaming/pipeline.py
@@ -38,16 +43,8 @@ def pair_match_stateful(
     events: DataFrame,
     placed_type: str = "click",
     fulfilled_type: str = "purchase",
-    ttl_ms: int = 24 * 3600 * 1000,
-    with_expiry_timer: bool = False,
 ) -> DataFrame:
     """events (streaming) → order.info records via explicit keyed state.
-
-    ``with_expiry_timer=True`` arms a ProcessingTimeTimeout per key
-    (the reference's punctuator expiry) — use in long-running
-    production streams. Default is NoTimeout: with timers armed the
-    engine must run a micro-batch per trigger just to evaluate them,
-    so a drain-style test/oracle run would never settle.
 
     The kernel is self-contained (builtins + pandas only) so workers
     unpickle it without importing this package.
@@ -58,32 +55,21 @@ def pair_match_stateful(
     ) -> Iterator[pd.DataFrame]:
         (user_id,) = key
         out: list[tuple[int, str, int, int]] = []
-        if state.hasTimedOut:
-            # expiry path == reference cleanup: emit a dead-letter row
-            # (resolves the TODO at OrderProcessor.java:184) and drop state.
-            (placed_ms,) = state.get
-            out.append((user_id, "expired.placed", placed_ms, -1))
-            state.remove()
+        placed_ms = state.get[0] if state.exists else None
+        rows = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
+        if len(rows):
+            rows = rows.sort_values(["ts_ms", "event_type", "event_id"])
+            for r in rows.itertuples(index=False):
+                if r.event_type == placed_type:
+                    placed_ms = int(r.ts_ms)  # last-writer-wins
+                elif r.event_type == fulfilled_type and placed_ms is not None:
+                    out.append((user_id, "order.info", int(r.ts_ms), int(r.ts_ms) - placed_ms))
+                    placed_ms = None  # emit-on-complete deletes state
+        if placed_ms is None:
+            if state.exists:
+                state.remove()
         else:
-            placed_ms = state.get[0] if state.exists else None
-            rows = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-            if len(rows):
-                rows = rows.sort_values(["ts_ms", "event_type", "event_id"])
-                for r in rows.itertuples(index=False):
-                    if r.event_type == placed_type:
-                        placed_ms = int(r.ts_ms)  # last-writer-wins
-                    elif r.event_type == fulfilled_type and placed_ms is not None:
-                        out.append(
-                            (user_id, "order.info", int(r.ts_ms), int(r.ts_ms) - placed_ms)
-                        )
-                        placed_ms = None  # emit-on-complete deletes state
-            if placed_ms is None:
-                if state.exists:
-                    state.remove()
-            else:
-                state.update((placed_ms,))
-                if with_expiry_timer:
-                    state.setTimeoutDuration(ttl_ms)
+            state.update((placed_ms,))
         yield pd.DataFrame(
             out, columns=["user_id", "event_kind", "fulfilled_ms", "processing_ms"]
         )
@@ -96,9 +82,5 @@ def pair_match_stateful(
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if with_expiry_timer
-            else GroupStateTimeout.NoTimeout
-        ),
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )

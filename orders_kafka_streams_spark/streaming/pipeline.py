@@ -18,8 +18,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql import types as T
 
 from ..functions.portable import epoch_ms
@@ -168,18 +169,16 @@ def stream_tumbling_agg(
     )
 
 
-def stream_pair_join(
+def _order_sides(
     events: DataFrame,
-    placed_type: str = "click",
-    fulfilled_type: str = "purchase",
-    window: str = "1 hour",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Stream-stream inner equi-join with an interval condition — the
-    idiomatic form of the reference's pair match (§2.4 join-order):
-    Spark's join state + watermark eviction replace the hand-rolled
-    store/punctuator. Emits every (placed, fulfilled) pair with
-    fulfilled.ts ∈ [placed.ts, placed.ts + window]."""
+    placed_type: str,
+    fulfilled_type: str,
+    watermark: str,
+    *fulfilled_extra: Column,
+) -> tuple[DataFrame, DataFrame]:
+    """The placed (``p_*``) and fulfilled (``f_*``) sides of the pair
+    match, each watermarked on its own event time. ``fulfilled_extra``
+    adds columns to the fulfilled side."""
     placed = (
         events.filter(F.col("event_type") == placed_type)
         .select(
@@ -195,9 +194,27 @@ def stream_pair_join(
             F.col("user_id").alias("f_user"),
             F.col("ts").alias("f_ts"),
             F.col("event_id").alias("f_event_id"),
-            F.col("value").alias("f_value"),
+            *fulfilled_extra,
         )
         .withWatermark("f_ts", watermark)
+    )
+    return placed, fulfilled
+
+
+def stream_pair_join(
+    events: DataFrame,
+    placed_type: str = "click",
+    fulfilled_type: str = "purchase",
+    window: str = "1 hour",
+    watermark: str = "1 hour",
+) -> DataFrame:
+    """Stream-stream inner equi-join with an interval condition — the
+    idiomatic form of the reference's pair match (§2.4 join-order):
+    Spark's join state + watermark eviction replace the hand-rolled
+    store/punctuator. Emits every (placed, fulfilled) pair with
+    fulfilled.ts ∈ [placed.ts, placed.ts + window]."""
+    placed, fulfilled = _order_sides(
+        events, placed_type, fulfilled_type, watermark, F.col("value").alias("f_value")
     )
     return placed.join(
         fulfilled,
@@ -259,24 +276,7 @@ def stream_pair_left_outer(
     unmatched rows arrive NULL-padded. ``stream_dead_letter`` filters
     the nulls; ``streaming/sinks.matched_dead_letter_sink`` fans BOTH
     branches to their sinks from this one join's state."""
-    placed = (
-        events.filter(F.col("event_type") == placed_type)
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("event_id").alias("p_event_id"),
-        )
-        .withWatermark("p_ts", watermark)
-    )
-    fulfilled = (
-        events.filter(F.col("event_type") == fulfilled_type)
-        .select(
-            F.col("user_id").alias("f_user"),
-            F.col("ts").alias("f_ts"),
-            F.col("event_id").alias("f_event_id"),
-        )
-        .withWatermark("f_ts", watermark)
-    )
+    placed, fulfilled = _order_sides(events, placed_type, fulfilled_type, watermark)
     return fulfilled.join(
         placed,
         F.expr(
@@ -286,24 +286,32 @@ def stream_pair_left_outer(
     )
 
 
-def run_to_memory(
-    result: DataFrame,
-    name: str,
-    output_mode: str = "append",
-    drain_partitions: int | None = 8,
-) -> str:
-    """Execute a streaming DataFrame to completion into a memory sink;
-    returns the sink table name. Synchronous: processAllAvailable
-    drains the source, then the engine's no-data micro-batch finalizes
-    watermark-closed windows before stop().
+#: state partition cap for :func:`run_to_memory`'s drain
+DRAIN_PARTITIONS = 8
 
-    ``drain_partitions`` caps the STATE partition count for the drain:
-    stateful operators pay a per-partition per-micro-batch state-store
-    commit, so partitions must be sized to state VOLUME, not CPU count
-    — measured 13.0 s → 3.2 s for the sf0.1 dead-letter drain going
-    32 → 8 partitions with identical output. A long-running deployment
-    sizes this once at first checkpoint (state partitions are fixed by
-    the checkpoint thereafter); pass None to inherit the session conf.
+
+def process_all_available(q: StreamingQuery) -> None:
+    """``processAllAvailable``, then stop the query — also when the
+    drain raises, so a failed drain never leaves it running."""
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def run_to_memory(result: DataFrame, name: str) -> str:
+    """Execute a streaming DataFrame to completion into an append-mode
+    memory sink; returns the sink table name. Synchronous:
+    processAllAvailable drains the source, then the engine's no-data
+    micro-batch finalizes watermark-closed windows before stop().
+
+    The drain caps the STATE partition count at
+    :data:`DRAIN_PARTITIONS`: stateful operators pay a per-partition
+    per-micro-batch state-store commit, so partitions must be sized to
+    state VOLUME, not CPU count — measured 13.0 s → 3.2 s for the sf0.1
+    dead-letter drain going 32 → 8 partitions with identical output. A
+    long-running deployment sizes this once at first checkpoint (state
+    partitions are fixed by the checkpoint thereafter).
     """
     spark = result.sparkSession
     for q in spark.streams.active:
@@ -311,19 +319,14 @@ def run_to_memory(
             q.stop()
     key = "spark.sql.shuffle.partitions"
     saved = spark.conf.get(key)
-    if drain_partitions is not None:
-        spark.conf.set(key, str(min(drain_partitions, int(saved))))
+    spark.conf.set(key, str(min(DRAIN_PARTITIONS, int(saved))))
     try:
-        q = (
+        process_all_available(
             result.writeStream.format("memory")
             .queryName(f"mem_{name}")
-            .outputMode(output_mode)
+            .outputMode("append")
             .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
     finally:
         spark.conf.set(key, saved)
     return f"mem_{name}"

@@ -199,15 +199,34 @@ def test_shard_write_crash_midjob_then_rerun_converges(spark, sf_dir, tmp_path, 
     assert p == r  # exact convergence: no drops, no duplicate partials
 
 
-def test_shard_sweep_spares_live_owner(spark, sf_dir, tmp_path):
-    """The stale-sibling sweep must not delete an OLD directory whose
-    owning process is still alive (r10 advice: a concurrent session's
-    lazy DataFrame can outlive the age gate)."""
-    import time
+def _excise_spans(spark, sf_dir):
+    from orders_kafka_streams_spark.operators.streaming_queries import _q_stream_excise_spans
 
+    return _q_stream_excise_spans(spark, sf_dir)
+
+
+def _shard_dir(spark, sf_dir):
     from orders_kafka_streams_spark.operators import curation
 
-    base = os.path.join("/tmp", "okss-shards")
+    return curation.materialized_shard_dir(spark, sf_dir)
+
+
+@pytest.mark.parametrize(
+    "namespace, call",
+    [("okss-shards", _shard_dir), ("okss-excise", _excise_spans)],
+    ids=["okss-shards", "okss-excise"],
+)
+def test_session_dir_sweep_spares_live_owner(spark, sf_dir, namespace, call):
+    """session.session_dir's stale-sibling sweep, driven through a
+    write-once caller and a fresh-output foreachBatch gate: a sibling
+    idle for over an hour is removed only when its owner process is
+    dead — a concurrent session's lazy DataFrame can outlive the age
+    gate, so an old sibling with a live owner must survive."""
+    import shutil
+    import tempfile
+    import time
+
+    base = os.path.join(tempfile.gettempdir(), namespace)
     os.makedirs(base, exist_ok=True)
     live = os.path.join(base, "livesib")
     dead = os.path.join(base, "deadsib")
@@ -218,9 +237,21 @@ def test_shard_sweep_spares_live_owner(spark, sf_dir, tmp_path):
         old = time.time() - 7200
         os.utime(p, (old, old))
 
-    curation.materialized_shard_dir(spark, sf_dir)
+    call(spark, sf_dir)
     assert os.path.isdir(live)  # old but alive → spared
     assert not os.path.isdir(dead)  # old and dead → swept
-    import shutil
-
     shutil.rmtree(live, ignore_errors=True)
+
+
+def test_fresh_session_dir_keeps_owner_record(spark, sf_dir):
+    """Emptying a per-call output keeps the _OWNER record that sibling
+    sessions' sweeps read; the directory is the same on every call."""
+    from orders_kafka_streams_spark.session import fresh_session_dir
+
+    out = fresh_session_dir(spark, "okss-fresh-test", sf_dir)
+    os.makedirs(os.path.join(out, "part"))
+    open(os.path.join(out, "data.parquet"), "w").close()
+    assert fresh_session_dir(spark, "okss-fresh-test", sf_dir) == out
+    assert os.listdir(out) == ["_OWNER"]
+    with open(os.path.join(out, "_OWNER")) as fh:
+        assert int(fh.read()) == os.getpid()
