@@ -6,9 +6,11 @@ hop) onto Structured Streaming's Kafka connector. One logical plan
 replaces the reference's four sub-topologies — intermediate topics
 become *optional* debug sinks instead of mandatory broker round-trips.
 
-The Kafka connector jar (spark-sql-kafka-0-10) is not on this image's
-classpath, so these builders are exercised by unit tests only up to
-plan construction; on a cluster with the jar they run as-is.
+These builders are untested: no test, package module or benchmark
+imports ``read_stream`` or ``write_stream``, and the Kafka connector
+jar (spark-sql-kafka-0-10) is not a dependency of the package, so not
+even their plan construction is exercised. They are meant for a cluster
+with that jar on the classpath.
 """
 
 from __future__ import annotations

@@ -13,6 +13,14 @@ the strictly-stronger idempotent-sink half of Spark's contract:
   batch N rewrites the same directory with the same rows — convergent,
   no duplicates — which is exactly the dynamic-partition-overwrite
   pattern a warehouse table (or Delta/Iceberg MERGE) uses at scale.
+- ``matched_dead_letter_sink``: the pair join's matched and dead-letter
+  branches from ONE write job per batch, with no persist (a cache would
+  be filled, read once and dropped). The write is staged under
+  ``_stage/batch_id=N`` and each branch is moved into place after
+  removing any leftover of a crashed attempt, so a replay converges.
+  The moves are plain renames: ``out_dir`` must be a local path.
+- ``swap_snapshot_write``: crash-safe replacement of a whole snapshot
+  table (write beside, then rename-aside swap), also on local paths.
 
 The built-in file sink achieves the same via its transaction log
 (tests/test_late_data.py::test_checkpoint_recovery_no_duplicates); the
@@ -23,6 +31,7 @@ plain object stores), so both are covered.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 
@@ -33,21 +42,42 @@ def matched_dead_letter_sink(out_dir: str):
     matched rows land in ``matched/batch_id=N`` and the NULL-padded
     finalized rows in ``dead_letter/batch_id=N`` — the reference's
     TODO side sink (OrderProcessor.java:184) as two branches of ONE
-    join's state, replay-safe via the same overwrite-by-batch-id
-    idempotence as :func:`idempotent_parquet_sink`."""
+    join's state.
+
+    One write job per batch: every row is tagged with its branch and
+    the batch is written once, ``partitionBy("branch")``, to
+    ``_stage/batch_id=N``; each ``branch=...`` directory is then moved
+    to its ``batch_id=N`` place (the tag lives only in the directory
+    name, so the files hold the join's columns). Nothing is persisted:
+    the batch has one consumer, so its rows stream from the join into
+    the writer instead of being cached and read back by a second job.
+    A branch with no rows gets a schema-only file from a ``limit(0)``
+    write, which the optimizer folds to an empty relation, so the
+    batch is not recomputed and the branch reads back as zero rows.
+
+    Replay-safe: the staged write overwrites whatever a crashed attempt
+    left there, and each move first removes its target, so a replay of
+    batch N converges on the same rows whatever step the crash
+    interrupted. The moves are ``os`` renames on a local path, as in
+    :func:`swap_snapshot_write`."""
     from pyspark.sql import functions as F
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()  # one batch, two consumers — split, don't recompute
-        try:
-            batch_df.filter(F.col("p_event_id").isNotNull()).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(out_dir, "matched", f"batch_id={batch_id}"))
-            batch_df.filter(F.col("p_event_id").isNull()).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(out_dir, "dead_letter", f"batch_id={batch_id}"))
-        finally:
-            batch_df.unpersist()
+        stage = os.path.join(out_dir, "_stage", f"batch_id={batch_id}")
+        branch = F.when(F.col("p_event_id").isNull(), "dead_letter").otherwise("matched")
+        batch_df.withColumn("branch", branch).write.mode("overwrite").partitionBy(
+            "branch"
+        ).parquet(stage)
+        for name in ("matched", "dead_letter"):
+            staged = os.path.join(stage, f"branch={name}")
+            if not os.path.isdir(staged):
+                batch_df.limit(0).write.mode("overwrite").parquet(staged)
+            target = os.path.join(out_dir, name, f"batch_id={batch_id}")
+            if os.path.isdir(target):
+                shutil.rmtree(target)
+            os.makedirs(os.path.dirname(target), exist_ok=True)
+            os.replace(staged, target)
+        shutil.rmtree(stage)
 
     return write
 
@@ -78,8 +108,6 @@ def swap_snapshot_write(df: DataFrame, path: str, batch_id: int, coalesce: int =
     batch (measured 14.5 → 10.8 s at sf0.1 on the SCD2 seam). On a
     lakehouse table a transactional MERGE INTO replaces this whole
     block."""
-    import shutil
-
     tmp_path = f"{path}.tmp-{batch_id}"
     old_path = f"{path}.old-{batch_id}"
     df.coalesce(coalesce).write.mode("overwrite").parquet(tmp_path)

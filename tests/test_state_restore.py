@@ -179,3 +179,57 @@ def test_one_join_fans_out_matched_and_dead_letter(spark, tmp_path):
     # final watermark, so it stays in state (not emitted to either sink)
     assert {r.f_event_id for r in dl} == {3}
     assert all(r.p_event_id is None for r in dl)
+
+
+def _fan_batch(spark, rows):
+    return spark.createDataFrame(rows, "f_event_id long, f_user long, p_event_id long")
+
+
+def _branch_rows(spark, out, branch):
+    return sorted(
+        (r.f_event_id, r.batch_id)
+        for r in spark.read.parquet(os.path.join(out, branch)).collect()
+    )
+
+
+def test_matched_dead_letter_sink_replay_converges(spark, tmp_path):
+    """A replayed batch id rewrites the same rows in both branches, also
+    over what a crashed attempt left behind: a stale stage directory and
+    a stale branch directory holding an extra row."""
+    from orders_kafka_streams_spark.streaming.sinks import matched_dead_letter_sink
+
+    out = os.path.join(str(tmp_path), "fan_out")
+    sink = matched_dead_letter_sink(out)
+    batch = _fan_batch(spark, [(2, 1, 1), (4, 3, 5), (3, 2, None)])
+    sink(batch, 0)
+    sink(batch, 0)
+    assert _branch_rows(spark, out, "matched") == [(2, 0), (4, 0)]
+    assert _branch_rows(spark, out, "dead_letter") == [(3, 0)]
+    # the branch tag is only the directory: the files hold the batch's columns
+    assert spark.read.parquet(os.path.join(out, "matched", "batch_id=0")).columns == batch.columns
+    assert os.listdir(os.path.join(out, "_stage")) == []
+
+    # crashed attempt of batch 1: a half-written stage and a dead-letter
+    # directory with a row the batch does not hold
+    _fan_batch(spark, [(99, 9, 9)]).write.parquet(
+        os.path.join(out, "_stage", "batch_id=1", "branch=matched")
+    )
+    _fan_batch(spark, [(98, 9, None)]).write.parquet(os.path.join(out, "dead_letter", "batch_id=1"))
+    sink(_fan_batch(spark, [(6, 1, 1), (7, 2, None)]), 1)
+    assert _branch_rows(spark, out, "matched") == [(2, 0), (4, 0), (6, 1)]
+    assert _branch_rows(spark, out, "dead_letter") == [(3, 0), (7, 1)]
+    assert os.listdir(os.path.join(out, "_stage")) == []
+
+
+def test_matched_dead_letter_sink_empty_branch_reads_zero_rows(spark, tmp_path):
+    """A batch without dead letters still leaves a schema-only
+    ``dead_letter/batch_id=N`` that reads back as zero rows."""
+    from orders_kafka_streams_spark.streaming.sinks import matched_dead_letter_sink
+
+    out = os.path.join(str(tmp_path), "fan_out")
+    batch = _fan_batch(spark, [(2, 1, 1), (4, 3, 5)])
+    matched_dead_letter_sink(out)(batch, 3)
+    dl = spark.read.parquet(os.path.join(out, "dead_letter", "batch_id=3"))
+    assert dl.schema == batch.schema
+    assert dl.count() == 0
+    assert _branch_rows(spark, out, "matched") == [(2, 3), (4, 3)]
