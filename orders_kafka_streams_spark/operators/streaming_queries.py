@@ -12,7 +12,7 @@ stream-stream join state) against ANSI SQL:
   cutoff (wend ≤ max(ts) − delay).
 - q_stream_pair_join: stream-stream interval join; single-batch drain
   ⇒ no eviction losses, oracle is the plain interval join.
-- q_stream_pair_match: the applyInPandasWithState fidelity matcher —
+- q_stream_pair_match: the keyed-state fidelity matcher —
   sequential per-key semantics are SQL-expressible (running
   last-click state = windowed carry), so even this is oracle-checked.
 """
@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..streaming.pair_matcher import pair_match_stateful
+from ..streaming.keyed_state import pair_match_stateful
 from pyspark.sql import functions as F
 
 from .presentation import cells_sorted
@@ -376,14 +376,15 @@ def _q_stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user running EWMA through the streaming engine (explicit
-    keyed state, streaming/ewma.py). Single-batch drain folds each
+    keyed state, streaming/keyed_state.py). Single-batch drain folds each
     user's full event sequence in (ts, event_id) order, so every output
     row's ewma equals the prefix fold of the recurrence — which is
     SQL-expressible, hence oracle-checked like the pair matcher."""
-    from ..streaming.ewma import stream_ewma
+    from ..streaming.keyed_state import stream_ewma
+    from .timeseries import EWMA_ALPHA
 
     ev = events_file_stream(spark, sf_dir)
-    tab = run_to_memory(stream_ewma(ev), "ewma_stream")
+    tab = run_to_memory(stream_ewma(ev, EWMA_ALPHA), "ewma_stream")
     return spark.table(tab).withColumn("ewma", F.round("ewma", 6))
 
 
@@ -393,7 +394,7 @@ def _q_stream_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions (stateless — curation.classifier_scores on the
     streaming plan), and a stateful O(sources) counter admits at most
     SOURCE_QUOTA quality-passing docs per source in arrival (doc_id)
-    order (streaming/quota.py). The batch q_source_quota ranks by
+    order (streaming/keyed_state.py). The batch q_source_quota ranks by
     margin — a full-pass notion; the ingest twin is the
     arrival-order cap a live corpus intake actually runs, and ITS
     batch equivalent (first-N by doc_id among margin>0 docs) is the
@@ -401,7 +402,7 @@ def _q_stream_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches (tests/test_stream_quota.py)."""
     from ..functions.textfns import tokens
     from ..streaming.pipeline import documents_file_stream
-    from ..streaming.quota import stream_source_quota
+    from ..streaming.keyed_state import stream_source_quota
     from .curation import SOURCE_QUOTA, classifier_scores
 
     docs = documents_file_stream(spark, sf_dir)
@@ -421,7 +422,7 @@ def _q_stream_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming admission twin of the mixture-interleave schedule
     (VERDICT r10 item 5): documents ARRIVE as a stream and each is
     stamped with its per-source arrival rank by an O(sources) stateful
-    counter (streaming/interleave.py — the q_stream_source_quota
+    counter (streaming/keyed_state.py — the q_stream_source_quota
     ledger without the cap); its global training position then follows
     from the MEMOIZED corpus schedule outside the stream: the stride
     key within_rank / √(source tokens) (weights are the batch
@@ -436,7 +437,7 @@ def _q_stream_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch equivalent is the oracle. Batch-split invariance: the
     counter carries across micro-batches
     (tests/test_stream_interleave.py)."""
-    from ..streaming.interleave import stream_interleave_ranks
+    from ..streaming.keyed_state import stream_interleave_ranks
     from ..streaming.pipeline import documents_file_stream
     from .sampling import global_row_numbers
     from .text import _tokenized
@@ -463,13 +464,13 @@ def _q_stream_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_stream_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Markov transition matrix fed by the streaming engine: the
-    stateful per-user last-event cursor (streaming/transitions.py)
+    stateful per-user last-event cursor (streaming/keyed_state.py)
     emits adjacent prev→next pairs; the matrix rollup runs over the
     drained pair relation. The emitted pair SET is batch-split
     invariant (state carries the cursor across micro-batches —
     tests/test_stream_transitions.py), so the matrix equals the batch
     window-lag form and shares q_transition_matrix's oracle."""
-    from ..streaming.transitions import stream_transitions
+    from ..streaming.keyed_state import stream_transitions
 
     ev = events_file_stream(spark, sf_dir)
     tab = run_to_memory(stream_transitions(ev), "transitions_stream")
@@ -839,13 +840,13 @@ def _q_stream_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_stream_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Debounce audit fed by the streaming engine: the stateful
-    per-(user, type) last-timestamp cursor (streaming/debounce.py)
+    per-(user, type) last-timestamp cursor (streaming/keyed_state.py)
     flags each arriving event against the carried previous raw event;
     the per-type rollup runs over the drained verdict relation. The
     flag SET is batch-split invariant (state seeds the first gap of
     every micro-batch — tests/test_stream_debounce.py), so the audit
     equals the batch lag-window form and shares q_debounce's oracle."""
-    from ..streaming.debounce import stream_debounce
+    from ..streaming.keyed_state import stream_debounce
     from .timeseries import DEBOUNCE_MS
 
     ev = events_file_stream(spark, sf_dir)
@@ -1526,6 +1527,7 @@ from .pipeline import ORACLE as _PL_ORACLE
 from .warehouse import ORACLE as _WH_ORACLE
 
 from .dedup import ORACLE as _DD_ORACLE
+from .timeseries import EWMA_ALPHA as _EWMA_ALPHA
 
 ORACLE = {
     # the streaming merge must equal the batch SCD2 build exactly
@@ -1547,7 +1549,7 @@ ORACLE = {
     "q_stream_ann_ingest": None,  # filled below (import-order seam)
     # the streamed per-batch gate must equal the offline batch gate
     "q_stream_quality_gate": None,  # filled below (import-order seam)
-    "q_stream_ewma": """
+    "q_stream_ewma": f"""
 WITH e AS (SELECT user_id, event_id, epoch_ms(ts) AS ms, value FROM events),
 g AS (
   SELECT user_id,
@@ -1561,7 +1563,7 @@ x AS (
 SELECT user_id, s.event_id AS event_id, s.ms AS ts_ms, s.value AS value,
        round(CASE WHEN i = 1 THEN s.value
                   ELSE list_reduce(list_transform(seq[1:i], t -> t.value),
-                                   (a, v) -> 0.3 * v + 0.7 * a)
+                                   (a, v) -> {_EWMA_ALPHA} * v + {1 - _EWMA_ALPHA} * a)
              END, 6) AS ewma,
        CAST(i AS BIGINT) AS n
 FROM x

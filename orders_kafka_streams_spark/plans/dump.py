@@ -161,7 +161,7 @@ COMMENTARY = {
     "q_epoch_schedule": "multi-epoch schedule: constant N_EPOCHS map-side fan-out, ONE grouped two-pass rank over (epoch, seeded hash, doc_id) so epoch blocks are contiguous by construction, N as a 1-row broadcast, power-of-two rep_value (no libm)",
     "q_semantic_pack": "in-context-pretraining packing audit: both orderings cumsum-binned by the grouped two-pass prefix sum, intra-bin affinity via the |\u03a3u|\u00b2 sum-vector identity over (bin, dim) cells \u2014 O(docs\u00b7dim), never a pairwise join",
     "q_stream_repetition": "streaming repetition gate: per-micro-batch tokenize + the batch metrics (per-doc functions, zero corpus state \u2014 the cheapest twin class), batch-split invariant by construction",
-    "q_stream_interleave": "streaming interleave admission: ONE applyInPandasWithState counter per source stamps arrival ranks (state O(sources)), then the memoized \u221a-temperature weights and the grouped two-pass rank assign global positions over the drained relation \u2014 the quota-ledger ingest shape + the transition-matrix drain-then-rollup shape",
+    "q_stream_interleave": "streaming interleave admission: ONE keyed_fold counter per source stamps arrival ranks (state O(sources)), then the memoized \u221a-temperature weights and the grouped two-pass rank assign global positions over the drained relation \u2014 the quota-ledger ingest shape + the transition-matrix drain-then-rollup shape",
     "q_kmv_union": "sketch set algebra: tagged distinct-hash cells, per-tag two-phase top-K (Partial WGL below the tag shuffle), 3-cell pivot + 1-row exact-twin broadcast — sketches merge associatively, so at scale per-source sketches answer cross-source distincts without re-scans",
     "q_write_shards": "shard write materialized: packing + two-pass global-shuffle permutation upstream, ONE hash exchange on shard for the write (SEQ_SHARDS writer tasks), audit = scan of the written parquet + one SEQ_SHARDS-row aggregate; oracle recomputes permutation, blocks, and both checksums from raw documents",
     "q_apply_decontamination": "span-level benchmark decontamination: benchmark window set = BENCH_DOCS rows of the MEMOIZED exsub relation (broadcastable at any corpus scale), corpus positions equality-join it, per-doc run merge + the shared excision join — corpus never self-joins",
@@ -176,7 +176,7 @@ COMMENTARY = {
     "q_knn_binary": "binary-quantization ANN: 16-byte sign masks (32x compression) broadcast-probed map-side, Hamming = two integer bit_count(xor) — no floats until the rerank; shortlist is two-phase top-k (Partial WindowGroupLimit keeps BINARY_SHORTLIST/query per scan task BEFORE the shuffle; merge ranks P*k winners); rerank reuses the query_id partitioning shuffle-free over the <=BINARY_SHORTLIST survivors; integer-exact shortlist makes the full chain hash-checkable",
     "q_dedup_containment": "asymmetric containment dedup: probe-side AllPairs prefix filter (containment >= t forces a collision inside A's |A|-ceil(t|A|)+1 rarest shingles) joined to the full inverted index — the containee side is unprunable by definition (tiny-doc-in-huge-doc is the point), but probe prefixes are rare so postings stay short; exact intersect verify; no all-pairs",
     "q_source_quota": "per-source quality quota: classifier margin map-side, within-source rank = GROUPED two-pass prefix sum of ones (range partition + pid-local window + broadcast triangular offsets) — a PARTITION BY source window would sort each source's whole corpus slice in ONE task; quota filter map-side",
-    "q_stream_source_quota": "streaming admission quota: stateless classifier margin on the ingest plan, then ONE applyInPandasWithState counter per source (state O(sources), no buffer) — admitted set batch-split-invariant under in-order delivery",
+    "q_stream_source_quota": "streaming admission quota: stateless classifier margin on the ingest plan, then ONE keyed_fold counter per source (state O(sources), no buffer) — admitted set batch-split-invariant under in-order delivery",
     "q_gini_activity": "Gini concentration: per-user counts partial-combine, count-of-count cells, ONE ordered running-sum window per group; tied-block rank sums telescope — exact ints until two final divisions",
     "q_skyline_users": "2D Pareto skyline: per-user totals in one exchange, per-x maxima reduce to O(distinct x) cells, running-max window finds the frontier — zero self-joins vs the naive O(n^2) NOT EXISTS",
     "q_isotonic_calibration": "isotonic fit via PAV minimax: corpus to <=bins cells, prefix sums, bin-pair expansion is cells-squared (constant), running max over j per k then running min over k — no iterative pooling",

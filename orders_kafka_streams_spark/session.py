@@ -167,10 +167,7 @@ def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSes
         # wrong in both directions locally; right-size to the host once,
         # without clobbering a deliberately configured value.
         spark.conf.set("spark.sql.shuffle.partitions", str(default_parallelism()))
-    try:
-        _ship_package(spark)
-    except Exception:  # pragma: no cover - best-effort; kernels are self-contained
-        pass
+    _ship_package(spark)
     return spark
 
 

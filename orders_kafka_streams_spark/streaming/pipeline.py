@@ -248,8 +248,9 @@ def stream_dead_letter(
     placed row with p_ts ≤ f_ts can arrive anymore) the engine emits
     it exactly once, NULL-padded — the filter below routes those rows
     to the dead-letter sink. Matched rows flow through the same join
-    and are simply not selected here; a production topology would
-    fan both branches out of one join (foreachBatch or two sinks).
+    and are simply not selected here;
+    streaming/sinks.matched_dead_letter_sink fans both branches out of
+    one join in one foreachBatch write.
 
     Batch twin: operators/pipeline.dead_letters (last-click carry);
     this one is pair-complete (any click in the window matches, not

@@ -1,10 +1,10 @@
-"""Streaming debounce cursor (streaming/debounce.py): hand-computed
-flag expectations plus the batch-split invariance the
+"""Streaming debounce cursor (streaming/keyed_state.stream_debounce):
+hand-computed flag expectations plus the batch-split invariance the
 q_stream_debounce twin relies on — the flagged SET must be identical
 whether the stream drains in one micro-batch or one file per trigger
 (the per-(user, type) last-timestamp cursor carries across batches).
 
-Same ordering contract as streaming/transitions.py: batches must
+Same ordering contract as stream_transitions: batches must
 respect per-key event-time order (file sources replay history in
 order)."""
 
@@ -15,7 +15,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from orders_kafka_streams_spark.streaming.debounce import stream_debounce
+from orders_kafka_streams_spark.streaming.keyed_state import stream_debounce
 from orders_kafka_streams_spark.streaming.pipeline import (
     EVENTS_FILE_SCHEMA,
     run_to_memory,

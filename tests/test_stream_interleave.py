@@ -1,4 +1,5 @@
-"""Streaming interleave admission (streaming/interleave.py):
+"""Streaming interleave admission
+(streaming/keyed_state.stream_interleave_ranks):
 hand-computed rank expectations plus the batch-split invariance
 q_stream_interleave relies on — every row's per-source arrival rank
 (and therefore its downstream stride key and global position) must be
@@ -7,7 +8,7 @@ per trigger (the per-source counter carries across batches).
 
 Like the EWMA/quota/transition cursors, the invariance holds when
 batches respect doc_id order (file sources replay history in order);
-same contract as streaming/ewma.py.
+same contract as stream_ewma.
 """
 
 from __future__ import annotations
@@ -17,7 +18,7 @@ import os
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from orders_kafka_streams_spark.streaming.interleave import stream_interleave_ranks
+from orders_kafka_streams_spark.streaming.keyed_state import stream_interleave_ranks
 from orders_kafka_streams_spark.streaming.pipeline import run_to_memory
 
 SCHEMA = T.StructType(

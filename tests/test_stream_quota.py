@@ -1,4 +1,5 @@
-"""Streaming per-source admission quota (streaming/quota.py):
+"""Streaming per-source admission quota
+(streaming/keyed_state.stream_source_quota):
 hand-computed admission expectations plus the batch-split invariance
 q_stream_source_quota relies on — the admitted SET (and each row's
 admission rank) must be identical whether the stream drains in one
@@ -8,7 +9,7 @@ across batches).
 Like the EWMA/transition cursors, the invariance holds when batches
 respect doc_id order (file sources replay history in order) — a batch
 delivering an earlier doc after a later one would admit out of order;
-same contract as streaming/ewma.py.
+same contract as stream_ewma.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from orders_kafka_streams_spark.streaming.pipeline import run_to_memory
-from orders_kafka_streams_spark.streaming.quota import stream_source_quota
+from orders_kafka_streams_spark.streaming.keyed_state import stream_source_quota
 
 SCHEMA = T.StructType(
     [

@@ -1,4 +1,5 @@
-"""Streaming Markov-transition cursor (streaming/transitions.py):
+"""Streaming Markov-transition cursor
+(streaming/keyed_state.stream_transitions):
 hand-computed pair expectations plus the batch-split invariance the
 q_stream_transition_matrix twin relies on — the emitted pair SET must
 be identical whether the stream drains in one micro-batch or one file
@@ -7,7 +8,7 @@ per trigger (the per-user last-event cursor carries across batches).
 Like the EWMA cursor, the invariance holds when batches respect
 per-user event-time order (file sources replay history in order); a
 batch containing an earlier event than an already-consumed one would
-move the cursor backwards — same contract as streaming/ewma.py.
+move the cursor backwards — same contract as stream_ewma.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from orders_kafka_streams_spark.streaming.pipeline import (
     EVENTS_FILE_SCHEMA,
     run_to_memory,
 )
-from orders_kafka_streams_spark.streaming.transitions import stream_transitions
+from orders_kafka_streams_spark.streaming.keyed_state import stream_transitions
 
 BASE_MS = 1_700_000_040_000
 
