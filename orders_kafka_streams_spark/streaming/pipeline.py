@@ -309,8 +309,10 @@ def run_to_memory(result: DataFrame, name: str) -> str:
     The drain caps the STATE partition count at
     :data:`DRAIN_PARTITIONS`: stateful operators pay a per-partition
     per-micro-batch state-store commit, so partitions must be sized to
-    state VOLUME, not CPU count — measured 13.0 s → 3.2 s for the sf0.1
-    dead-letter drain going 32 → 8 partitions with identical output. A
+    state VOLUME, not CPU count — the sf0.1 dead-letter drain, same
+    output, took 4.8 s at 32 partitions and 2.4 s at 8 (medians of 3,
+    4-core host, :func:`~orders_kafka_streams_spark.session.get_spark`
+    session). A
     long-running deployment sizes this once at first checkpoint (state
     partitions are fixed by the checkpoint thereafter).
     """

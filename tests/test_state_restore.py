@@ -13,6 +13,7 @@ idempotent sink instead of double-writing.
 from __future__ import annotations
 
 import os
+import re
 import time
 
 from pyspark.sql import functions as F
@@ -134,14 +135,27 @@ def test_foreachbatch_idempotent_sink_replay_safe(spark, tmp_path):
     assert spark.read.parquet(out).count() == 5
 
 
+def _pair_join_to_sink(spark, src_glob, out, ckpt):
+    """Drain the pair join into ``matched_dead_letter_sink(out)``."""
+    from orders_kafka_streams_spark.streaming.pipeline import (
+        process_all_available,
+        stream_pair_left_outer,
+    )
+    from orders_kafka_streams_spark.streaming.sinks import matched_dead_letter_sink
+
+    process_all_available(
+        stream_pair_left_outer(_stream(spark, src_glob), window="1 hour", watermark="10 minutes")
+        .writeStream.foreachBatch(matched_dead_letter_sink(out))
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+
+
 def test_one_join_fans_out_matched_and_dead_letter(spark, tmp_path):
     """The reference's TODO side sink (OrderProcessor.java:184) as two
     branches of ONE stream-stream join: matched pairs and null-padded
     dead letters route to separate sinks from the same state, with
     nothing lost and nothing duplicated."""
-    from orders_kafka_streams_spark.streaming.pipeline import stream_pair_left_outer
-    from orders_kafka_streams_spark.streaming.sinks import matched_dead_letter_sink
-
     d = os.path.join(str(tmp_path), "fan_src")
     os.makedirs(d, exist_ok=True)
     out = os.path.join(str(tmp_path), "fan_out")
@@ -160,17 +174,7 @@ def test_one_join_fans_out_matched_and_dead_letter(spark, tmp_path):
             (9, BASE_MS + 190 * MIN, 9, "purchase", 1.0),
         ],
     )
-    ev = _stream(spark, os.path.join(d, "part*"))
-    q = (
-        stream_pair_left_outer(ev, window="1 hour", watermark="10 minutes")
-        .writeStream.foreachBatch(matched_dead_letter_sink(out))
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _pair_join_to_sink(spark, os.path.join(d, "part*"), out, ckpt)
 
     matched = spark.read.parquet(os.path.join(out, "matched")).collect()
     dl = spark.read.parquet(os.path.join(out, "dead_letter")).collect()
@@ -179,6 +183,38 @@ def test_one_join_fans_out_matched_and_dead_letter(spark, tmp_path):
     # final watermark, so it stays in state (not emitted to either sink)
     assert {r.f_event_id for r in dl} == {3}
     assert all(r.p_event_id is None for r in dl)
+
+
+def _matched_pairs(spark, out):
+    rows = spark.read.parquet(os.path.join(out, "matched")).collect()
+    return sorted((r.f_event_id, r.p_event_id) for r in rows)
+
+
+def test_pair_join_state_survives_restart(spark, tmp_path):
+    """The join's state store is restored from the checkpoint: a click
+    held in state when run 1 stops matches the purchase that run 2
+    reads, and the pair is written once. The state files carry Spark's
+    checksum files, and no temp file of a checkpoint write is left."""
+    d = os.path.join(str(tmp_path), "jr_src")
+    os.makedirs(d, exist_ok=True)
+    out = os.path.join(str(tmp_path), "jr_out")
+    ckpt = os.path.join(str(tmp_path), "jr_ckpt")
+    glob = os.path.join(d, "part*")
+
+    # run 1: a click for user 1, no purchase yet; it stays in state
+    _write_file(spark, d, "part1", [(1, BASE_MS + 1 * MIN, 1, "click", 0.0)])
+    _pair_join_to_sink(spark, glob, out, ckpt)
+    assert _matched_pairs(spark, out) == []
+
+    # run 2 (fresh query object, same checkpoint): the matching purchase
+    _write_file(spark, d, "part2", [(2, BASE_MS + 2 * MIN, 1, "purchase", 9.0)])
+    _pair_join_to_sink(spark, glob, out, ckpt)
+    assert _matched_pairs(spark, out) == [(2, 1)]
+
+    files = [f for _, _, names in os.walk(ckpt) for f in names]
+    state = [f for _, _, names in os.walk(os.path.join(ckpt, "state")) for f in names]
+    assert any(re.fullmatch(r"\d+\.delta\.crc", f) for f in state), sorted(state)
+    assert not [f for f in files if ".tmp" in f], sorted(files)
 
 
 def _fan_batch(spark, rows):
@@ -223,12 +259,23 @@ def test_matched_dead_letter_sink_replay_converges(spark, tmp_path):
 
 def test_matched_dead_letter_sink_empty_branch_reads_zero_rows(spark, tmp_path):
     """A batch without dead letters still leaves a schema-only
-    ``dead_letter/batch_id=N`` that reads back as zero rows."""
+    ``dead_letter/batch_id=N`` that reads back as zero rows, and the
+    empty branch costs no Spark job of its own: the batch's one
+    partitioned write is the only job the sink runs."""
     from orders_kafka_streams_spark.streaming.sinks import matched_dead_letter_sink
 
     out = os.path.join(str(tmp_path), "fan_out")
     batch = _fan_batch(spark, [(2, 1, 1), (4, 3, 5)])
-    matched_dead_letter_sink(out)(batch, 3)
+    sc = spark.sparkContext
+    group = "empty-branch-sink"
+    sc.setJobGroup(group, "job-count probe")
+    try:
+        matched_dead_letter_sink(out)(batch, 3)
+    finally:
+        sc.setJobGroup(None, None)
+    # the status tracker is fed by the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
     dl = spark.read.parquet(os.path.join(out, "dead_letter", "batch_id=3"))
     assert dl.schema == batch.schema
     assert dl.count() == 0
